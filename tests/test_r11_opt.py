@@ -99,10 +99,21 @@ def test_bounded_state_session_scopes_and_sizes_state(spark, tmp_path):
     bounded clone, and (2) NEVER touches the parent session's conf — a
     query planned concurrently on the parent keeps its partitioning
     (VERDICT r11 item 7: the r11 context manager mutated the shared
-    session conf for its duration)."""
+    session conf for its duration).
+
+    The bound is chosen to differ from both of the parent's partition
+    counts (``shuffle.partitions`` and AQE's ``initialPartitionNum``):
+    ``load_table`` runs the autosizer, which sets the parent's
+    ``initialPartitionNum`` to ``cpus`` on small inputs, so a fixed
+    bound can equal the parent's own count and a plan on the parent
+    could not tell a leaked bound from the parent's partitioning."""
     from pravega_spark.queries.stream_ops import _bounded_state_session
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
+    parent_initial = int(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+    )
+    n = next(k for k in range(2, 16) if k not in (int(prev), parent_initial))
     src = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     df = spark.range(0, 100).select(
@@ -111,8 +122,8 @@ def test_bounded_state_session_scopes_and_sizes_state(spark, tmp_path):
         F.col("id").alias("v"),
     )
     df.coalesce(1).write.parquet(src)
-    bounded = _bounded_state_session(spark, 4)
-    assert bounded.conf.get("spark.sql.shuffle.partitions") == "4"
+    bounded = _bounded_state_session(spark, n)
+    assert bounded.conf.get("spark.sql.shuffle.partitions") == str(n)
     # the bound is INVISIBLE to the parent, even while the clone exists
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
     q = (
@@ -129,7 +140,9 @@ def test_bounded_state_session_scopes_and_sizes_state(spark, tmp_path):
     # a query planned on the PARENT mid-run shuffles at the parent's
     # partitioning: planning reads the session's SQLConf, and the
     # parent's is untouched while the clone's query runs — the plan's
-    # pre-AQE exchange carries the parent's count, not the bound
+    # pre-AQE exchange carries the parent's count (with AQE coalescing
+    # on, initialPartitionNum: the partition count before coalescing),
+    # not the bound
     import re
 
     plan = (
@@ -142,11 +155,11 @@ def test_bounded_state_session_scopes_and_sizes_state(spark, tmp_path):
         )
     )
     counts = {int(m) for m in re.findall(r"hashpartitioning\([^\[\]]*?(\d+)\)", plan)}
-    assert counts and 4 not in counts, (counts, plan)
+    assert counts == {parent_initial} and n not in counts, (counts, n, plan)
     q.awaitTermination()
     import os
     state_parts = [d for d in os.listdir(os.path.join(ckpt, "state", "0"))
                    if d.isdigit()]
-    assert len(state_parts) == 4, state_parts
+    assert len(state_parts) == n, (state_parts, n)
     # parent conf untouched after the run as well
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
