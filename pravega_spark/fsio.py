@@ -863,6 +863,35 @@ def parquet_num_rows(path: str) -> int:
     return pq.read_metadata(p, filesystem=f).num_rows
 
 
+def parquet_rows_and_range(path: str, column: str) -> tuple[int, int | None, int | None]:
+    """Row count and the min/max of an integer ``column`` from ONE
+    parquet footer read — no Spark job, no data read. A file whose
+    row groups lack that column's statistics falls back to reading the
+    column. (0, None, None) for an empty file."""
+    import pyarrow.parquet as pq
+
+    f, p = _split(path)
+    md = pq.read_metadata(p) if f is None else pq.read_metadata(p, filesystem=f)
+    if md.num_rows == 0:
+        return 0, None, None
+    idx = next(i for i in range(md.num_columns) if md.schema.column(i).path == column)
+    lo = hi = None
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        if rg.num_rows == 0:
+            continue
+        st = rg.column(idx).statistics
+        if st is None or not st.has_min_max:
+            import pyarrow.compute as pc
+
+            col = pq.read_table(p, columns=[column], filesystem=f)[column]
+            mm = pc.min_max(col)
+            return md.num_rows, mm["min"].as_py(), mm["max"].as_py()
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return md.num_rows, lo, hi
+
+
 def join(*parts: str) -> str:
     """Path join that leaves URI schemes intact ('/' separator)."""
     if "://" in parts[0]:

@@ -80,12 +80,7 @@ class KeyValueTable:
             self.config = KeyValueTableConfiguration(**doc["config"])
             self._next_version = doc["next_version"]
             self._meta_version = doc.get("version", 0)
-            if "files" in doc:
-                self._files = list(doc["files"])
-            else:
-                # pre-manifest layout: adopt whatever is on disk once
-                self._files = sorted(self._list_data_files())
-                self._save_meta()
+            self._files = list(doc["files"])
         else:
             self.config = config or KeyValueTableConfiguration()
             self._next_version = 1
@@ -108,7 +103,7 @@ class KeyValueTable:
         if doc is not None:
             self._next_version = doc["next_version"]
             self._meta_version = doc.get("version", 0)
-            self._files = list(doc.get("files", []))
+            self._files = list(doc["files"])
 
     def _lock(self):
         # heartbeat-renewed lease lock: a multi-second Spark job inside

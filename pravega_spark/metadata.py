@@ -49,6 +49,15 @@ def segment_number(segment_id: int) -> int:
     return segment_id & ((1 << EPOCH_SHIFT) - 1)
 
 
+def entries_in_range(entries: list[list], lo: int, hi: int) -> list[str]:
+    """Names of the manifest entries ``[name, e_lo, e_hi]`` whose offset
+    range meets ``[lo, hi)``, in manifest order. Pruning only: readers
+    still filter rows on ``offset``."""
+    if hi <= lo:
+        return []
+    return [name for name, e_lo, e_hi in entries if e_lo < hi and e_hi > lo]
+
+
 def _now_ms() -> int:
     return int(time.time() * 1000)
 
@@ -135,10 +144,10 @@ class MetadataStore:
         # unusable (active_epoch would IndexError for every caller)
         self._write(self._doc_path(scope, stream, "epochs.json"),
                     [{"epoch": 0, "creation_time": _now_ms(), "segments": segments}])
-        self._write(self._doc_path(scope, stream, "segments.json"), {
+        self._write(self._doc_path(scope, stream, "segments.json"), {"segments": {
             str(s["segment_id"]): {"sealed": False, "head_offset": 0, "tail_offset": 0, "event_count": 0}
             for s in segments
-        })
+        }})
         self._write(p, {
             "scope": scope, "stream": stream, "sealed": False,
             "creation_time": _now_ms(), "config": config.to_json(),
@@ -216,28 +225,29 @@ class MetadataStore:
     def segments_doc(self, scope: str, stream: str) -> dict:
         """Full segments document: the single atomic commit point of the
         data plane. Shape: ``{"version": N, "segments": {sid: {sealed,
-        head_offset, tail_offset, event_count, manifest}}, "writer_seqs":
-        {...}, "committed_txns": [...]}``.
+        head_offset, tail_offset, event_count, manifest, chain}},
+        "writer_seqs": {...}, "committed_txns": [...]}``.
 
-        ``manifest`` is a per-segment pointer: the file list lives in a
-        SHARDED side document ``manifests/<sid>.<manifest>.json`` (see
-        ``segment_files``) written before the doc flip, so one commit
-        writes O(touched segments) manifest bytes while this doc stays a
-        few hundred bytes per segment forever — at 10^5-10^6 live files
-        an inline list would make every commit rewrite the whole stream's
-        file inventory (the reference keeps per-segment metadata records
-        for the same reason, PersistentStreamBase). Older docs with an
-        inline ``files`` list read transparently and migrate on the next
-        touch. ONLY manifest-listed parquet files are visible to
-        readers, which is what makes a crash between parquet append and
-        this doc's write safe (orphan files are invisible; a retry
-        commits fresh files). writer_seqs / committed_txns ride in the
-        same doc so exactly-once markers are atomic WITH visibility.
+        A segment's committed files are manifest ENTRIES ``[name, lo,
+        hi]``: the file's relative path and the half-open offset range
+        ``[lo, hi)`` its rows hold. ``manifest`` points at a SHARDED side
+        document ``manifests/<sid>.<manifest>.json`` holding the entries
+        of an older snapshot, and ``chain`` lists the entries committed
+        since (see ``segment_entries``). The shard is written before the
+        doc flip, so one commit writes O(touched segments) manifest bytes
+        while this doc stays a few hundred bytes per segment forever — at
+        10^5-10^6 live files an inline list would make every commit
+        rewrite the whole stream's file inventory (the reference keeps
+        per-segment metadata records for the same reason,
+        PersistentStreamBase). ONLY manifest-listed parquet files are
+        visible to readers, which is what makes a crash between parquet
+        append and this doc's write safe (orphan files are invisible; a
+        retry commits fresh files). writer_seqs / committed_txns ride in
+        the same doc so exactly-once markers are atomic WITH visibility.
         ``version`` makes the write conditional (lost-update detection
         for cross-process writers)."""
         doc = self._read(self._doc_path(scope, stream, "segments.json"), {})
-        if "segments" not in doc:  # migrate pre-manifest flat layout
-            doc = {"segments": doc}
+        doc.setdefault("segments", {})
         doc.setdefault("version", 0)
         doc.setdefault("writer_seqs", {})
         doc.setdefault("committed_txns", [])
@@ -263,32 +273,30 @@ class MetadataStore:
 
     # ---------- sharded per-segment file manifests ----------
     def _manifest_path(self, scope: str, stream: str, sid: str, version) -> str:
-        # ``version`` is an int for legacy/compaction snapshots, a tag
-        # string for r9 chain-fold snapshots — both name uniquely
+        # ``version`` is an int for compaction snapshots, a tag string
+        # for chain-fold snapshots — both name uniquely
         return self._doc_path(scope, stream, "manifests", f"{sid}.{version}.json")
 
     def write_segment_manifest(self, scope: str, stream: str, sid: str,
-                               version, files: list[str]) -> None:
-        self._write(self._manifest_path(scope, stream, sid, version), {"files": files})
+                               version, entries: list[list]) -> None:
+        self._write(self._manifest_path(scope, stream, sid, version), {"files": entries})
 
     def drop_segment_manifest(self, scope: str, stream: str, sid: str, version) -> None:
         fsio.remove(self._manifest_path(scope, stream, sid, version))
 
-    def segment_files(self, scope: str, stream: str, sid: str, entry: dict) -> list[str]:
-        """Resolve a segment's committed file list: snapshot shard (the
-        ``manifest`` pointer) plus the inline ``chain`` of files
-        committed since that snapshot (r9: the hot commit appends file
-        names to the bounded in-doc chain — O(1) per commit — and folds
-        the chain into a fresh snapshot shard every CHAIN_MAX commits,
-        so the doc stays O(segments), never O(stream files)). Legacy
-        inline ``files`` lists still resolve. Callers hold the commit
+    def segment_entries(self, scope: str, stream: str, sid: str, entry: dict) -> list[list]:
+        """Resolve a segment's committed manifest entries ``[name, lo,
+        hi]`` in offset order: the snapshot shard (the ``manifest``
+        pointer) plus the inline ``chain`` of entries committed since
+        that snapshot (the hot commit appends to the bounded in-doc
+        chain — O(1) per commit — and folds the chain into a fresh
+        snapshot shard every CHAIN_MAX commits, so the doc stays
+        O(segments), never O(stream files)). Callers hold the commit
         lock (a held lock guarantees the pointed-to shard exists);
         lockless readers use :meth:`resolve_files`, which retries the
         race where a commit GCs the old shard between doc read and
         shard read."""
         chain = list(entry.get("chain", ()))
-        if "files" in entry:
-            return list(entry["files"]) + chain
         v = entry.get("manifest")
         if v is None:
             return chain
@@ -302,12 +310,21 @@ class MetadataStore:
             )
         return list(doc["files"]) + chain
 
-    def resolve_files(self, scope: str, stream: str) -> tuple[dict, dict[str, list[str]]]:
-        """Lockless snapshot (full segments DOC, {sid: files}) for
+    def segment_files(self, scope: str, stream: str, sid: str, entry: dict) -> list[str]:
+        """The names of a segment's committed files (see
+        :meth:`segment_entries`), for callers that need no offsets."""
+        return [e[0] for e in self.segment_entries(scope, stream, sid, entry)]
+
+    def resolve_files(
+        self, scope: str, stream: str, bounds: dict[int, tuple[int, int]] | None = None
+    ) -> tuple[dict, dict[str, list[str]]]:
+        """Lockless snapshot (full segments DOC, {sid: file names}) for
         readers — the doc (not just ``segments``) so the reader can
         precheck ``pending``/``reservations`` for visibility gaps a
         crashed writer left behind (store._maybe_read_repair) without a
-        second metadata read.
+        second metadata read. With ``bounds`` ({segment_id: (lo, hi)}),
+        only the listed segments resolve, each to the files whose offset
+        range meets ``[lo, hi)`` (:func:`entries_in_range`).
 
         Two-step resolution (doc → shards) can race a concurrent commit
         that deletes the old shard right after its doc flip; on a
@@ -320,9 +337,17 @@ class MetadataStore:
             doc = self.segments_doc(scope, stream)
             segs = doc["segments"]
             try:
+                if bounds is None:
+                    return doc, {
+                        sid: self.segment_files(scope, stream, sid, s)
+                        for sid, s in segs.items()
+                    }
                 return doc, {
-                    sid: self.segment_files(scope, stream, sid, s)
+                    sid: entries_in_range(
+                        self.segment_entries(scope, stream, sid, s), *bounds[int(sid)]
+                    )
                     for sid, s in segs.items()
+                    if int(sid) in bounds
                 }
             except ConcurrentModificationException as e:
                 last_err = e

@@ -64,6 +64,13 @@ def _bounded_state_session(spark: SparkSession, n: int | None = None) -> SparkSe
     )
     clone = spark.newSession()
     clone.conf.set("spark.sql.shuffle.partitions", str(n))
+    # newSession() starts from the builder's conf, not the parent's
+    # runtime conf: carry the parent's autosized AQE initial count over,
+    # or the clone's batch shuffles plan at the builder's constant
+    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    initial = spark.conf.get(key, None)
+    if initial is not None:
+        clone.conf.set(key, initial)
     return clone
 
 

@@ -24,11 +24,13 @@ Spark-first architecture:
     offset range predicates pushed to parquet row groups.
   * Visibility is manifest-based: readers see ONLY the parquet files
     the segments doc references (bounded in-doc chains folded into
-    snapshot shards), so a batch becomes visible exactly when its
-    conditional doc write lands — the atomic-commit manifest (SURVEY
-    §7 hard parts 1-2) without needing Delta. Hot appends reserve
-    offset ranges first and publish after writing payload unlocked
-    (r9), with contiguous-prefix absorption keeping offsets gap-free.
+    snapshot shards). Each entry carries its file's offset range, so a
+    bounded read opens only the files that hold its offsets. A batch
+    becomes visible exactly when its conditional doc write lands — the
+    atomic-commit manifest (SURVEY §7 hard parts 1-2) without needing
+    Delta. Hot appends reserve offset ranges first and publish after
+    writing payload unlocked (r9), with contiguous-prefix absorption
+    keeping offsets gap-free.
   * Per-key order: a routing key hashes to exactly one live segment per
     epoch; offsets within a segment are assigned by a window over the
     arrival sequence, so ``ORDER BY offset`` per segment reproduces
@@ -1015,7 +1017,7 @@ class StreamStore:
                                 fsio.remove(fsio.join(path, rel))
                         raise
             for files in new_files.values():  # best-effort orphan cleanup
-                for rel in files:
+                for rel, _lo, _hi in files:
                     try:
                         fsio.remove(fsio.join(path, rel))
                     except OSError:
@@ -1030,11 +1032,12 @@ class StreamStore:
         bases: dict[int, int],
         path: str,
         tag: str,
-    ) -> tuple[dict[int, list[str]], dict[int, int]]:
+    ) -> tuple[dict[int, list[list]], dict[int, int]]:
         """Write one parquet file per touched segment at pre-reserved
         offsets — the payload half of the hot append, called WITHOUT the
         commit lock (offsets were fixed at reserve time, so nothing here
-        depends on shared state).
+        depends on shared state). Returns each segment's manifest entry
+        ``[name, base, base + n]`` and row count.
 
         Pure-Arrow on purpose: a pandas round-trip would upconvert the
         µs timestamps Spark emitted to ns, and this session reads
@@ -1062,20 +1065,20 @@ class StreamStore:
                 s = s.append_column(EVENT_TIME, pa.nulls(n, type=ts_us))
             dst_rel = os.path.join(f"segment_id={sid}", f"commit-{tag}-hot.parquet")
             fsio.parquet_write_table(s, fsio.join(path, dst_rel))
-            return sid, dst_rel, n
+            return sid, [dst_rel, base, base + n], n
 
         sids = sorted(bases)
         if len(sids) == 1:
             results = [_write_seg(sids[0])]
         else:
             results = list(_io_pool().map(_write_seg, sids))
-        new_files: dict[int, list[str]] = {}
+        new_files: dict[int, list[list]] = {}
         counts: dict[int, int] = {}
         for r in results:
             if r is None:
                 continue
-            sid, dst_rel, n = r
-            new_files[sid] = [dst_rel]
+            sid, entry, n = r
+            new_files[sid] = [entry]
             counts[sid] = n
         return new_files, counts
 
@@ -1087,7 +1090,7 @@ class StreamStore:
         order_cols: list[str],
         path: str,
         tag: str,
-    ) -> tuple[dict[int, list[str]], dict[int, int]]:
+    ) -> tuple[dict[int, list[list]], dict[int, int]]:
         base = F.create_map(*[x for sid in [r[0] for r in ranges] for x in (F.lit(sid), F.lit(bases.get(sid, 0)))])
         # arrival order: optional txn part number first, then intra-part seq
         w = Window.partitionBy(SEGMENT_ID).orderBy(*[F.col(c) for c in order_cols])
@@ -1103,36 +1106,43 @@ class StreamStore:
         # the batch's files lists O(batch), never O(stream) — a full
         # stream-dir LIST per commit would be the scaling bottleneck at
         # ~10^5 live files. Files then move into the segment dirs under
-        # unique names (invisible until the manifest flip). Per-segment
-        # row counts come from the moved files' parquet footers
-        # (driver-side metadata reads — no second job, no persist);
-        # moves + footer reads fan out over a thread pool since each is
-        # an independent rename + metadata GET.
+        # unique names (invisible until the manifest flip).
         tmp = f"{path}.commit.{tag}"
         out.write.mode("overwrite").partitionBy(SEGMENT_ID).parquet(tmp)
+        new_files = self._promote_files(tmp, path, f"commit-{tag}-")
+        counts = {sid: sum(n for _e, n in got) for sid, got in new_files.items()}
+        return {sid: [e for e, _n in got] for sid, got in new_files.items()}, counts
 
-        def _promote(rel: str) -> tuple[int, str, int] | None:
+    def _promote_files(self, tmp: str, path: str, prefix: str) -> dict[int, list[tuple[list, int]]]:
+        """Move a Spark job's ``segment_id=N`` output from ``tmp`` into
+        the stream dir under ``prefix``-ed unique names (invisible until
+        a manifest flip references them) and remove ``tmp``. Returns
+        {sid: [(entry [name, lo, hi], rows)]} in file-name order; rows
+        and the offset range come from ONE parquet footer read per file
+        (driver-side metadata reads — no second job, no persist). Moves
+        + footer reads fan out over a thread pool since each is an
+        independent rename + metadata GET. Empty files are removed."""
+
+        def _promote(rel: str):
             seg_part = rel.split(os.sep, 1)[0]
             if not seg_part.startswith("segment_id="):
                 return None
             sid = int(seg_part.split("=", 1)[1])
-            dst_rel = os.path.join(seg_part, f"commit-{tag}-{os.path.basename(rel)}")
+            dst_rel = os.path.join(seg_part, f"{prefix}{os.path.basename(rel)}")
             fsio.move(fsio.join(tmp, rel), fsio.join(path, dst_rel))
-            n = fsio.parquet_num_rows(fsio.join(path, dst_rel))
+            n, lo, hi = fsio.parquet_rows_and_range(fsio.join(path, dst_rel), OFFSET)
             if n == 0:
                 fsio.remove(fsio.join(path, dst_rel))
                 return None
-            return sid, dst_rel, n
+            return sid, [dst_rel, lo, hi + 1], n
 
         rels = sorted(self._list_data_files(tmp))
         promoted = [r for r in _io_pool().map(_promote, rels) if r is not None]
         fsio.rmtree(tmp)
-        new_files: dict[int, list[str]] = {}
-        counts: dict[int, int] = {}
-        for sid, dst_rel, n in promoted:
-            new_files.setdefault(sid, []).append(dst_rel)
-            counts[sid] = counts.get(sid, 0) + n
-        return new_files, counts
+        out: dict[int, list[tuple[list, int]]] = {}
+        for sid, entry, n in promoted:
+            out.setdefault(sid, []).append((entry, n))
+        return out
 
     # ---------- reservation protocol (r9: per-stream lock sharding) ----------
     # The segments doc carries two extra structures so the hot append can
@@ -1140,9 +1150,10 @@ class StreamStore:
     #   reservations: {res_id: {"segs": {sid: [base, n]}, "ts": ms,
     #                           "writer"/"txn": marker}} — offset ranges
     #     handed out but not yet published;
-    #   pending: {sid: [{"base", "n", "files"}]} — published (durable,
-    #     acked) commits whose offsets are not yet contiguous with the
-    #     visible tail because an earlier reservation is still open.
+    #   pending: {sid: [{"base", "n", "files": [[name, lo, hi], ...]}]}
+    #     — published (durable, acked) commits whose offsets are not yet
+    #     contiguous with the visible tail because an earlier
+    #     reservation is still open.
     # Readers see ONLY the manifest, so both structures are invisible to
     # the data plane until absorption flips them in.
 
@@ -1278,22 +1289,23 @@ class StreamStore:
     def _shift_pending_entry(path: str, entry: dict, gap: int) -> list[str]:
         """Renumber one pending commit's files down by ``gap`` offsets
         (crash-repair only). Writes renumbered copies under NEW names,
-        updates ``entry["files"]`` in place, and returns the old names
-        for post-doc-write deletion."""
+        updates ``entry["files"]`` in place — names AND offset ranges:
+        a range left unshifted would make range-pruned readers skip the
+        rows — and returns the old names for post-doc-write deletion."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        old_files = list(entry["files"])
-        new_names = []
-        for rel in old_files:
+        old_files = [rel for rel, _lo, _hi in entry["files"]]
+        new_entries = []
+        for rel, lo, hi in entry["files"]:
             t = fsio.parquet_read_table(fsio.join(path, rel))
             idx = t.column_names.index(OFFSET)
             t = t.set_column(idx, OFFSET, pc.subtract(t[OFFSET], pa.scalar(gap, pa.int64())))
             d, b = os.path.split(rel)
             new_rel = os.path.join(d, f"shift{uuid.uuid4().hex[:6]}-{b}")
             fsio.parquet_write_table(t, fsio.join(path, new_rel))
-            new_names.append(new_rel)
-        entry["files"] = new_names
+            new_entries.append([new_rel, lo - gap, hi - gap])
+        entry["files"] = new_entries
         return old_files
 
     def _publish_locked(
@@ -1311,7 +1323,8 @@ class StreamStore:
         (+ optional per-segment attribute updates — atomic WITH the
         append, the reference's AttributeUpdateCollection semantics).
 
-        ``entries`` maps sid → {"base", "n", "files"}; each lands in the
+        ``entries`` maps sid → {"base", "n", "files"} (``files`` holds
+        manifest entries ``[name, lo, hi]``); each lands in the
         segment's pending list, then the contiguous prefix at the
         visible tail is absorbed into the manifest. A later-reserved
         writer that publishes first therefore stays durable-but-
@@ -1319,7 +1332,7 @@ class StreamStore:
         contiguous and readers never see a gap. Exactly-once markers
         advance at PUBLISH (durable == acked), even if visibility waits.
 
-        Manifest protocol (r9): each absorbed file name appends to the
+        Manifest protocol: each absorbed entry appends, unchanged, to the
         segment's bounded in-doc ``chain`` — O(1) doc bytes per commit.
         When a chain exceeds CHAIN_MAX entries, the full list folds into
         a fresh tag-named snapshot shard ``manifests/<sid>.<tag>.json``
@@ -1342,13 +1355,13 @@ class StreamStore:
                 {"base": e["base"], "n": e["n"], "files": sorted(e["files"])}
             )
         gc: list[tuple[str, int]] = []
-        shards: list[tuple[str, str, list[str]]] = []
+        shards: list[tuple[str, str, list[list]]] = []
         for sid_str in sorted(pend, key=int):
             waiting = sorted(pend[sid_str], key=lambda e: e["base"])
             s = segs.setdefault(
                 sid_str, {"sealed": False, "head_offset": 0, "tail_offset": 0, "event_count": 0}
             )
-            absorbed: list[str] = []
+            absorbed: list[list] = []
             n_abs = 0
             while waiting:
                 b = waiting[0]["base"]
@@ -1378,16 +1391,15 @@ class StreamStore:
             chain.extend(absorbed)
             s["tail_offset"] += n_abs
             s["event_count"] += n_abs
-            if len(chain) > CHAIN_MAX or "files" in s:
-                # fold chain (and any legacy inline list) into a fresh
-                # tag-named snapshot — tag names make concurrent
-                # processes' snapshots collision-free by construction
-                full = self.meta.segment_files(scope, stream, sid_str, s)
+            if len(chain) > CHAIN_MAX:
+                # fold the chain into a fresh tag-named snapshot — tag
+                # names make concurrent processes' snapshots
+                # collision-free by construction
+                full = self.meta.segment_entries(scope, stream, sid_str, s)
                 tag = uuid.uuid4().hex[:8]
                 shards.append((sid_str, tag, full))
                 if "manifest" in s:
                     gc.append((sid_str, s["manifest"]))
-                s.pop("files", None)
                 s["manifest"] = tag
                 s["chain"] = []
         # snapshot folds are rare (every CHAIN_MAX commits per segment)
@@ -1437,15 +1449,6 @@ class StreamStore:
         with self._commit_lock(scope, stream):
             doc = self.meta.segments_doc(scope, stream)
             segs = doc["segments"]
-            if any(
-                s.get("tail_offset", 0)
-                and "files" not in s and "manifest" not in s and "chain" not in s
-                for s in segs.values()
-            ):
-                # pre-manifest layout (_raw_read still supports it): the
-                # manifest is empty, so "disk minus manifest" would be EVERY
-                # data file — reaping here would delete the whole stream.
-                return []
             # fsck is the repair tool: clear expired reservations first so
             # their gaps don't stall absorption forever
             reap_obsolete = self._reap_reservations_locked(doc, path)
@@ -1472,7 +1475,7 @@ class StreamStore:
             # orphans only once the reservation expires).
             for entries in doc.get("pending", {}).values():
                 for e in entries:
-                    referenced.update(e["files"])
+                    referenced.update(rel for rel, _lo, _hi in e["files"])
             if doc.get("reservations"):
                 self._flush_reap(scope, stream, doc, reap_obsolete, path)
                 return []
@@ -1640,27 +1643,37 @@ class StreamStore:
             self._publish_locked(scope, stream, doc, {}, None, None, obsolete=obsolete or ())
         return True
 
-    def _raw_read(self, scope: str, stream: str) -> DataFrame:
+    def _raw_read(
+        self, scope: str, stream: str, bounds: dict[int, tuple[int, int]] | None = None
+    ) -> DataFrame:
+        """The stream's committed files as one frame. With ``bounds``
+        ({segment_id: (lo, hi)}) only the files whose manifest offset
+        range meets a listed segment's ``[lo, hi)`` are read. That is
+        pruning, not filtering: callers still filter on ``offset``."""
         path = self._stream_path(scope, stream)
         # lockless reader: resolve_files retries the doc→shard race so a
         # concurrent commit's shard GC can't make a segment look empty
-        doc, files_by_sid = self.meta.resolve_files(scope, stream)
+        doc, files_by_sid = self.meta.resolve_files(scope, stream, bounds)
         if self._maybe_read_repair(scope, stream, doc):
-            doc, files_by_sid = self.meta.resolve_files(scope, stream)
-        segs = doc["segments"]
+            doc, files_by_sid = self.meta.resolve_files(scope, stream, bounds)
         manifest = [f for files in files_by_sid.values() for f in files]
-        if manifest:
-            # manifest-based visibility: ONLY committed files are read, so
-            # orphans from crashed commits can never surface duplicates
-            return self.spark.read.option("basePath", path).parquet(
-                *[fsio.join(path, f) for f in manifest]
+        if not manifest and bounds is not None:
+            # nothing in range: keep the stream's schema by reading one
+            # committed file, whose rows the caller's filter drops
+            manifest = next(
+                (files[:1] for files in self.meta.resolve_files(scope, stream)[1].values() if files),
+                [],
             )
-        if not fsio.isdir(path) or not any(s.get("tail_offset", 0) for s in segs.values()):
+        if not manifest:
             # empty stream: synthesize empty frame with the envelope schema
             return self.spark.createDataFrame(
                 [], f"{ROUTING_KEY} string, {EVENT_TIME} timestamp, {INGEST_TIME} timestamp, {SEGMENT_ID} bigint, {OFFSET} bigint"
             )
-        return self.spark.read.parquet(path)  # pre-manifest layout
+        # manifest-based visibility: ONLY committed files are read, so
+        # orphans from crashed commits can never surface duplicates
+        return self.spark.read.option("basePath", path).parquet(
+            *[fsio.join(path, f) for f in manifest]
+        )
 
     def read(
         self,
@@ -1671,9 +1684,9 @@ class StreamStore:
     ) -> DataFrame:
         """Bounded batch read between two StreamCuts (BatchClient, R5).
 
-        The bounds become per-segment offset range predicates; with the
-        ``segment_id=N`` dir layout Catalyst prunes whole partitions and
-        parquet row-group stats prune by ``offset``. Head-clamp below
+        The bounds pick the files whose manifest offset range meets each
+        segment's window, then become per-segment offset range
+        predicates on those files. Head-clamp below
         raises TruncatedDataException like the reference reader when the
         requested start precedes the stream head.
         """
@@ -1701,12 +1714,14 @@ class StreamStore:
                 if off > tails.get(sid, 0):
                     raise InvalidStreamCutException(f"segment {sid}: end {off} beyond tail")
                 ends[sid] = off
-        df = self._raw_read(scope, stream)
+        bounds = {
+            sid: (starts.get(sid, 0), end)
+            for sid, end in ends.items()
+            if end > starts.get(sid, 0)
+        }
+        df = self._raw_read(scope, stream, bounds)
         cond = None
-        for sid, end in ends.items():
-            start = starts.get(sid, 0)
-            if end <= start:
-                continue
+        for sid, (start, end) in bounds.items():
             c = (F.col(SEGMENT_ID) == sid) & (F.col(OFFSET) >= start) & (F.col(OFFSET) < end)
             cond = c if cond is None else (cond | c)
         if cond is None:
@@ -1715,7 +1730,7 @@ class StreamStore:
 
     def fetch_event(self, scope: str, stream: str, segment_id: int, offset: int) -> DataFrame:
         """Point re-read by EventPointer (EventStreamReader.fetchEvent, R4)."""
-        return self._raw_read(scope, stream).filter(
+        return self._raw_read(scope, stream, {segment_id: (offset, offset + 1)}).filter(
             (F.col(SEGMENT_ID) == segment_id) & (F.col(OFFSET) == offset)
         )
 
@@ -1765,9 +1780,13 @@ class StreamStore:
         Replaces the reference's per-segment index-segment search
         (IndexRequestProcessor.findNearestIndexedOffset) with a
         stats-pruned parquet scan: min() over a pushed-down filter.
+        Offsets cannot narrow an event-time search, so the manifest
+        prunes only the files wholly below each segment's head.
         """
-        tails = self.meta.tail_offsets(scope, stream)
-        df = self._raw_read(scope, stream)
+        segs = self.meta.get_segments(scope, stream)
+        tails = {int(k): v["tail_offset"] for k, v in segs.items()}
+        heads = {int(k): v["head_offset"] for k, v in segs.items()}
+        df = self._raw_read(scope, stream, {sid: (h, 1 << 62) for sid, h in heads.items()})
         rows = (
             df.filter(F.col(EVENT_TIME) >= F.lit(ts))
             .groupBy(SEGMENT_ID)
@@ -1775,7 +1794,6 @@ class StreamStore:
             .collect()
         )
         found = {r[SEGMENT_ID]: r["o"] for r in rows}
-        heads = self.meta.head_offsets(scope, stream)
         # clamp to head: after a truncate (before compaction) the raw
         # scan still surfaces sub-head rows, and a cut below the head
         # would be rejected by read()
@@ -1820,13 +1838,12 @@ class StreamStore:
         rollover-sized files.
         """
         # ONE doc read snapshots the plan: per-segment identity (manifest
-        # pointer / legacy inline list + tail offset) plus heads/tails.
-        # The flip below compares each segment against this snapshot, so
-        # the stale-plan check is per SEGMENT, not per stream.
+        # pointer + chain + tail offset) plus heads/tails. The flip below
+        # compares each segment against this snapshot, so the stale-plan
+        # check is per SEGMENT, not per stream.
         doc0 = self.meta.segments_doc(scope, stream)
         planned = {
-            sid: (s.get("manifest"), tuple(s.get("files", [])),
-                  tuple(s.get("chain", [])), s["tail_offset"])
+            sid: (s.get("manifest"), s.get("chain", []), s["tail_offset"])
             for sid, s in doc0["segments"].items()
         }
         heads = {int(k): v["head_offset"] for k, v in doc0["segments"].items()}
@@ -1855,16 +1872,10 @@ class StreamStore:
         tmp = f"{path}.compact.{uuid.uuid4().hex[:8]}"
         live.repartition(SEGMENT_ID).write.mode("overwrite").partitionBy(SEGMENT_ID).parquet(tmp)
         tag = uuid.uuid4().hex[:8]
-        new_files: dict[int, list[str]] = {}
-        for rel in sorted(self._list_data_files(tmp)):
-            seg_part = rel.split(os.sep, 1)[0]
-            if not seg_part.startswith("segment_id="):
-                continue
-            sid = int(seg_part.split("=", 1)[1])
-            dst_rel = os.path.join(seg_part, f"compact-{tag}-{os.path.basename(rel)}")
-            fsio.move(fsio.join(tmp, rel), fsio.join(path, dst_rel))
-            new_files.setdefault(sid, []).append(dst_rel)
-        fsio.rmtree(tmp)
+        new_files = {
+            sid: [e for e, _n in got]
+            for sid, got in self._promote_files(tmp, path, f"compact-{tag}-").items()
+        }
         flipped_old: list[str] = []
         abandoned: list[str] = []
         with self._commit_lock(scope, stream):
@@ -1873,13 +1884,12 @@ class StreamStore:
             gc: list[tuple[str, int]] = []
             any_flip = False
             for sid_str, s in doc["segments"].items():
-                current = (s.get("manifest"), tuple(s.get("files", [])),
-                           tuple(s.get("chain", [])), s["tail_offset"])
+                current = (s.get("manifest"), s.get("chain", []), s["tail_offset"])
                 if planned.get(sid_str) != current:
                     # a commit landed in THIS segment since planning: the
                     # lazy plan would drop its rows — abandon just this
                     # segment's rewrite (files become invisible orphans)
-                    abandoned += new_files.get(int(sid_str), [])
+                    abandoned += [rel for rel, _lo, _hi in new_files.get(int(sid_str), [])]
                     continue
                 any_flip = True
                 flipped_old += self.meta.segment_files(scope, stream, sid_str, s)
@@ -1888,7 +1898,6 @@ class StreamStore:
                 )
                 if "manifest" in s:
                     gc.append((sid_str, s["manifest"]))
-                s.pop("files", None)
                 s.pop("chain", None)  # the rewrite folded the chain in
                 s["manifest"] = ver + 1
                 s["head_offset"] = max(s["head_offset"], heads.get(int(sid_str), 0))

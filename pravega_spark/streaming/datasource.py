@@ -14,9 +14,11 @@ idiomatic replacement for the reference's reader-group machinery
   - per-key order holds because a partition reads one segment in
     offset order and a routing key lives in exactly one live segment.
 
-Reads go through pyarrow on the executors with offset-range filters —
-parquet row-group stats prune, so a tail read touches only recent
-files.
+Each manifest entry records the offset range ``[lo, hi)`` of one
+committed file, so ``partitions`` hands each slice only the files whose
+range meets the slice's offsets: a tail read opens the few files that
+hold its offsets, whatever the stream's history. Reads go through
+pyarrow on the executors and still filter rows on ``offset``.
 
 Options: ``root``, ``scope``, ``stream``, optional ``start_cut`` /
 ``end_cut`` (JSON StreamCuts — end_cut makes a *bounded* stream, the
@@ -61,14 +63,14 @@ ENVELOPE = StructType(
 
 class SegmentSlice(InputPartition):
     def __init__(self, path: str, segment_id: int, start: int, end: int,
-                 files: list[str] | None = None):
+                 files: list[str] = ()):
         self.path = path
         self.segment_id = segment_id
         self.start = start
         self.end = end
-        # manifest: committed files for this segment (relative to path).
-        # None = pre-manifest stream (read the whole segment dir).
-        self.files = files
+        # committed files (relative to path) whose manifest offset range
+        # meets [start, end), in offset order
+        self.files = list(files)
 
 
 # fat record batches per yield: each batch crossing the Python-worker →
@@ -91,28 +93,14 @@ def _read_slice_table(sl: SegmentSlice):
 
     from pravega_spark import fsio
 
+    if not sl.files:
+        return None
     # URI roots (object stores, fsio-registered filesystems) resolve to
     # a pyarrow filesystem + normalized path; local stays on the os
     # fast path. ds.dataset(filesystem=None) means "infer local".
     fs, base = fsio._split(sl.path)
     join = (lambda *p: "/".join(x.rstrip("/") for x in p)) if fs is not None else os.path.join
-    seg_dir = join(base, f"segment_id={sl.segment_id}")
-    if sl.files is not None:
-        paths = [join(base, f) for f in sl.files]
-        if not paths:
-            return None
-        dataset = ds.dataset(paths, format="parquet", filesystem=fs)
-    else:
-        # pre-manifest stream: read the whole segment directory
-        if fs is not None:
-            from pyarrow import fs as pafs
-
-            present = fs.get_file_info(seg_dir).type == pafs.FileType.Directory
-        else:
-            present = os.path.isdir(seg_dir)
-        if not present:
-            return None
-        dataset = ds.dataset(seg_dir, format="parquet", filesystem=fs)
+    dataset = ds.dataset([join(base, f) for f in sl.files], format="parquet", filesystem=fs)
     flt = (ds.field("offset") >= sl.start) & (ds.field("offset") < sl.end)
     names = [f.name for f in ENVELOPE.fields]
     have = set(dataset.schema.names)
@@ -165,7 +153,7 @@ def _load_segments(root: str, scope: str, stream: str) -> dict[str, dict]:
     from pravega_spark import fsio
 
     doc = fsio.read_json(fsio.join(root, "_metadata", scope, stream, "segments.json"), {})
-    return doc["segments"] if "segments" in doc else doc
+    return doc.get("segments", {})
 
 
 def _load_tails(root: str, scope: str, stream: str) -> dict[int, int]:
@@ -176,11 +164,11 @@ def _load_heads(root: str, scope: str, stream: str) -> dict[int, int]:
     return {int(k): v["head_offset"] for k, v in _load_segments(root, scope, stream).items()}
 
 
-def _load_files(root: str, scope: str, stream: str,
-                only_sids: set[int] | None = None) -> dict[int, list[str] | None]:
-    """Per-segment committed-file manifest; None = pre-manifest stream.
+def _load_entries(root: str, scope: str, stream: str,
+                  only_sids: set[int]) -> dict[int, list[list]]:
+    """Per-segment committed manifest entries ``[name, lo, hi]``.
 
-    Shard resolution delegates to ``MetadataStore.segment_files`` (pure
+    Shard resolution delegates to ``MetadataStore.segment_entries`` (pure
     fsio/stdlib — constructible inside data source workers), wrapped in
     the lockless doc→shard retry: a concurrent commit GCs the old shard
     right after its doc flip, so a missing shard means OUR doc snapshot
@@ -200,20 +188,40 @@ def _load_files(root: str, scope: str, stream: str,
     ms = MetadataStore(root)
     last: Exception | None = None
     for attempt in range(5):
-        out: dict[int, list[str] | None] = {}
         try:
-            for k, v in _load_segments(root, scope, stream).items():
-                if only_sids is not None and int(k) not in only_sids:
-                    continue
-                if "files" in v or "chain" in v or v.get("manifest") is not None:
-                    out[int(k)] = ms.segment_files(scope, stream, k, v)
-                else:
-                    out[int(k)] = None  # pre-manifest: read the whole dir
-            return out
+            return {
+                int(k): ms.segment_entries(scope, stream, k, v)
+                for k, v in _load_segments(root, scope, stream).items()
+                if int(k) in only_sids
+            }
         except ConcurrentModificationException as e:
             last = e
             _time.sleep(0.05 * (attempt + 1))
     raise last
+
+
+def plan_slices(root: str, scope: str, stream: str,
+                start: dict, end: dict) -> list[SegmentSlice]:
+    """One slice per segment whose offsets advance from ``start`` to
+    ``end`` (both {str(segment_id): offset}), in ``end``'s order, each
+    holding only the committed files whose manifest offset range meets
+    its ``[start, end)``. Shared by the source's ``partitions`` and the
+    sink's driver-side pump."""
+    from pravega_spark.metadata import entries_in_range
+
+    path = os.path.join(root, "streams", scope, stream)
+    ranges = {
+        int(sid): (int(start.get(sid, 0)), int(hi))
+        for sid, hi in end.items()
+        if int(hi) > int(start.get(sid, 0))
+    }
+    # O(active segments) metadata reads per trigger: idle segments'
+    # manifest shards are never touched
+    entries = _load_entries(root, scope, stream, set(ranges)) if ranges else {}
+    return [
+        SegmentSlice(path, sid, lo, hi, entries_in_range(entries.get(sid, []), lo, hi))
+        for sid, (lo, hi) in ranges.items()
+    ]
 
 
 def read_offsets_log(checkpoint_dir: str, batch_id: int) -> dict[str, int] | None:
@@ -369,18 +377,7 @@ class PravegaStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         self._advance(end)  # authoritative plan boundary
-        needed = {
-            int(sid) for sid, hi in end.items() if int(hi) > int(start.get(sid, 0))
-        }
-        # O(active segments) metadata reads per trigger: idle segments'
-        # manifest shards are never touched
-        files = _load_files(self.root, self.scope, self.stream, only_sids=needed) if needed else {}
-        out = []
-        for sid, hi in end.items():
-            lo = int(start.get(sid, 0))
-            hi = int(hi)
-            if hi > lo:
-                out.append(SegmentSlice(self.path, int(sid), lo, hi, files.get(int(sid))))
+        out = plan_slices(self.root, self.scope, self.stream, start, end)
         return out or [SegmentSlice(self.path, -1, 0, 0)]
 
     def read(self, partition: SegmentSlice) -> Iterator:

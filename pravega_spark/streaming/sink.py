@@ -170,11 +170,7 @@ def _pump_prepare(source, bounds, total: int | None):
     verify BEFORE anything becomes visible."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from pravega_spark.streaming.datasource import (
-        SegmentSlice,
-        _load_files,
-        _read_slice_table,
-    )
+    from pravega_spark.streaming.datasource import _read_slice_table, plan_slices
 
     start, end = bounds
     if end is None or start is None:
@@ -183,18 +179,10 @@ def _pump_prepare(source, bounds, total: int | None):
     if total == 0 or total > _store_mod.HOT_MAX_ROWS:
         return None
     try:
-        src_root = source.store.root
-        src_scope, src_stream = source.scope, source.stream
-        path = os.path.join(src_root, "streams", src_scope, src_stream)
-        needed = {
-            int(sid) for sid, hi in end.items() if int(hi) > int(start.get(sid, 0))
-        }
-        files = _load_files(src_root, src_scope, src_stream, only_sids=needed)
-        slices = [
-            SegmentSlice(path, int(sid), int(start.get(sid, 0)), int(hi), files.get(int(sid)))
-            for sid, hi in sorted(end.items(), key=lambda kv: int(kv[0]))
-            if int(hi) > int(start.get(sid, 0))
-        ]
+        slices = plan_slices(
+            source.store.root, source.scope, source.stream, start,
+            dict(sorted(end.items(), key=lambda kv: int(kv[0]))),
+        )
         if len(slices) > 1:
             with ThreadPoolExecutor(min(8, len(slices))) as ex:
                 tabs = list(ex.map(_read_slice_table, slices))

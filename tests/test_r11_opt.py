@@ -163,3 +163,19 @@ def test_bounded_state_session_scopes_and_sizes_state(spark, tmp_path):
     assert len(state_parts) == n, (state_parts, n)
     # parent conf untouched after the run as well
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_bounded_state_session_keeps_parent_initial_partitions(spark, tmp_path):
+    """The clone carries the parent's AQE initial partition count, as
+    set by the autosizer: ``newSession()`` starts from the builder's
+    conf, so without the copy a batch shuffle planned on the clone
+    starts at the builder's constant instead of the parent's count."""
+    from pravega_spark.queries.stream_ops import _bounded_state_session
+    from pravega_spark.session import autosize_shuffle_partitions
+
+    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    n = autosize_shuffle_partitions(spark, str(tmp_path))  # empty input: cpus
+    assert spark.conf.get(key) == str(n)
+    bounded = _bounded_state_session(spark, 3)
+    assert bounded.conf.get(key) == spark.conf.get(key) == str(n)
+    assert bounded.conf.get("spark.sql.shuffle.partitions") == "3"
