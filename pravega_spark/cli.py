@@ -13,7 +13,8 @@ Mirrors the same command groups over the Spark-native engine:
     python -m pravega_spark.cli --root /data/store kvt get myscope/t1 k
 
 The SparkSession is created lazily — metadata-only commands (scope ops,
-stream list/info) never start a JVM.
+stream list/info), stream append and kvt create/delete/put/get never
+start a JVM; only stream read and kvt list do.
 """
 
 from __future__ import annotations
@@ -141,8 +142,9 @@ def cmd_kvt(args) -> int:
     from pravega_spark.kvt import KeyValueTableManager
 
     scope, name = _split_qualified(args.name)
-    if args.action in ("create", "delete"):
-        # metadata-only DDL: no JVM (the module's lazy-Spark contract)
+    if args.action != "list":
+        # DDL, put and get need no JVM: metadata docs, driver-side
+        # parquet writes and Arrow key lookups (the lazy-Spark contract)
         mgr = KeyValueTableManager(None, args.root)
         if args.action == "create":
             # boolean reports whether the table was NEWLY created
@@ -150,21 +152,18 @@ def cmd_kvt(args) -> int:
             # qualified name
             t = mgr.create_key_value_table(scope, name)
             print(json.dumps({"created": t.was_created, "table": f"{scope}/{name}"}))
-        else:
+        elif args.action == "delete":
             print(json.dumps({"deleted": mgr.delete_key_value_table(scope, name)}))
+        elif args.action == "put":
+            print(json.dumps({"version": mgr.open(scope, name).put(args.key, args.value)}))
+        else:
+            got = mgr.open(scope, name).get(args.key)
+            print(json.dumps({"value": got[0], "version": got[1]} if got else None))
         return 0
-    mgr = KeyValueTableManager(_store(args).spark, args.root)
-    t = mgr.open(scope, name)
-    if args.action == "put":
-        v = t.put(args.key, args.value)
-        print(json.dumps({"version": v}))
-    elif args.action == "get":
-        got = t.get(args.key)
-        print(json.dumps({"value": got[0], "version": got[1]} if got else None))
-    elif args.action == "list":
-        for row in t.iterate_all().collect():
-            print(json.dumps({"pk": row["pk"], "sk": row["sk"], "value": row["value"],
-                              "version": row["version"]}))
+    t = KeyValueTableManager(_store(args).spark, args.root).open(scope, name)
+    for row in t.iterate_all().collect():
+        print(json.dumps({"pk": row["pk"], "sk": row["sk"], "value": row["value"],
+                          "version": row["version"]}))
     return 0
 
 

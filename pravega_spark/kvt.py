@@ -22,15 +22,19 @@ deterministic and CAS checks can never observe a half-applied batch
 streams). All file operations go through ``fsio`` so KVTs work on
 object-store roots like the rest of the engine.
 
-Reads resolve the latest version per key with a window (max-version
-row); ``compact()`` rewrites the log keeping only live heads — the
-lakehouse MERGE/OPTIMIZE pattern replacing the reference's hash-table
-segment + compactor. The version log doubles as the change feed (delta
-iterator) for free.
-
-At scale: point lookups prune to one bucket partition + parquet
-row-group stats on pk; range scans prune by min/max pk stats; the
-latest-version window shuffles only the touched buckets.
+Point ops (``get``, ``get_all``, ``exists`` and the CAS read of a
+conditional update) are driver-side Arrow key lookups, the
+table-segment key index (ContainerKeyIndex.java) over Parquet: only
+the keys' ``bucket=N/`` manifest entries are opened, row groups whose
+pk min/max statistics exclude every wanted key are skipped, and the
+max-version row per key wins — no Spark job, so a table opened with
+``spark=None`` serves point ops and updates up to ``KVT_HOT_MAX_ROWS``.
+``snapshot()``, the iterators, the delta iterator and ``compact()``
+resolve the latest version per key with a Spark window (max-version
+row) over the whole log; ``compact()`` rewrites the log keeping only
+live heads — the lakehouse MERGE/OPTIMIZE pattern replacing the
+reference's hash-table segment + compactor. The version log doubles
+as the change feed (delta iterator) for free.
 """
 
 from __future__ import annotations
@@ -60,6 +64,14 @@ MUST_NOT_EXIST = -2
 # batches take the distributed writer. KVT updates are the reference's
 # millisecond client path (TableSegment appends), not an analytics job.
 KVT_HOT_MAX_ROWS = int(os.environ.get("PRAVEGA_SPARK_KVT_HOT_MAX_ROWS", "100000"))
+
+_LOG_COLUMNS = ["pk", "sk", "value", "version", "deleted"]
+
+
+def _key(pk: str, sk: str | None) -> tuple[str, str]:
+    """The stored form of a key: a ``None`` secondary key is ``""``, on
+    writes and point reads alike, so both name one logical key."""
+    return pk, sk if sk is not None else ""
 
 
 class KeyValueTable:
@@ -171,32 +183,25 @@ class KeyValueTable:
 
     def _update_locked(self, entries: list[tuple], kinds: list[str],
                        expected_versions: list[int] | None = None) -> int:
-        # normalize sk=None to "" up front: stored rows use "", so a
-        # None-keyed CAS lookup would otherwise never match the stored
-        # row and e.g. let an insert of (pk, None) succeed next to an
-        # existing (pk, "") — two versions of one logical key
-        entries = [(pk, sk if sk is not None else "", v) for pk, sk, v in entries]
-        expected = expected_versions or [ANY_VERSION] * len(entries)
-        keys = {(e[0], e[1]) for e in entries}
+        # one entry per key, the last one named: two rows of one key in
+        # a batch would share its version and leave the winner to chance
+        batch: dict[tuple[str, str], tuple] = {}
+        for (pk, sk, value), kind, exp in zip(
+            entries, kinds, expected_versions or [ANY_VERSION] * len(entries)
+        ):
+            batch[_key(pk, sk)] = (value, kind, exp)
         # unconditional puts need no key-index lookup (the reference's
         # unconditional TableSegment update skips ContainerKeyIndex's
         # bucket-offset resolution, ContainerKeyIndex.java) — the CAS
         # read only runs when some entry is conditional, an insert, or
-        # a remove (absent-key removes are no-ops, which needs current)
-        needs_cas = any(
-            kind != "put" or exp != ANY_VERSION for kind, exp in zip(kinds, expected)
-        )
-        current: dict[tuple, int] = {}
-        if needs_cas:
-            latest = self._bucket_pruned([k[0] for k in keys])  # CAS check reads only the keys' buckets
-            if latest is not None:
-                rows = latest.filter(F.col("pk").isin([k[0] for k in keys])).select("pk", "sk", "version").collect()
-                for r in rows:
-                    if (r["pk"], r["sk"]) in keys:
-                        current[(r["pk"], r["sk"])] = r["version"]
-        skip: set[int] = set()
-        for i, ((pk, sk, _), kind, exp) in enumerate(zip(entries, kinds, expected)):
-            cur = current.get((pk, sk))
+        # a remove (absent-key removes are no-ops, which needs current);
+        # it reads the manifest update() just reloaded under the lock
+        needs_cas = any(kind != "put" or exp != ANY_VERSION for _, kind, exp in batch.values())
+        current = self._point_lookup(batch) if needs_cas else {}
+        version = self._next_version
+        rows = []
+        for (pk, sk), (value, kind, exp) in batch.items():
+            cur = current[(pk, sk)][1] if (pk, sk) in current else None
             if kind == "insert" or exp == MUST_NOT_EXIST:
                 if cur is not None:
                     raise BadKeyVersionException(f"key {pk!r}/{sk!r} exists at version {cur}")
@@ -207,28 +212,22 @@ class KeyValueTable:
                     raise BadKeyVersionException(f"key {pk!r}/{sk!r}: expected {exp}, found {cur}")
             if kind == "remove" and cur is None and exp == ANY_VERSION:
                 # removing an absent key unconditionally is a no-op in the
-                # reference; keep the tombstone out of the log (the row
-                # build below must actually SKIP it, not just note it —
-                # a phantom tombstone would surface a delete event for a
-                # key that never existed in entry_delta_iterator)
-                skip.add(i)
-        version = self._next_version
-        n_buckets = self.config.partition_count
-        rows = [
-            {
+                # reference; keep the tombstone out of the log (a phantom
+                # tombstone would surface a delete event for a key that
+                # never existed in entry_delta_iterator)
+                continue
+            rows.append({
                 "pk": pk,
-                "sk": sk if sk is not None else "",
+                "sk": sk,
                 "value": value if kind != "remove" else None,
                 "version": version,
                 "deleted": kind == "remove",
-            }
-            for i, ((pk, sk, value), kind) in enumerate(zip(entries, kinds))
-            if i not in skip
-        ]
+            })
         if not rows:
             # a batch of pure no-ops mutates nothing: no version burned,
             # no file committed
             return self._next_version - 1
+        n_buckets = self.config.partition_count
         tag = uuid.uuid4().hex[:8]
         if len(rows) <= KVT_HOT_MAX_ROWS:
             # hot path: per-bucket pyarrow writes, zero Spark jobs —
@@ -298,42 +297,57 @@ class KeyValueTable:
             return self.spark.createDataFrame([], "pk string, sk string, value string, version long")
         return latest.filter(~F.col("deleted")).select("pk", "sk", "value", "version")
 
-    def _bucket_pruned(self, pks: list[str]) -> DataFrame | None:
-        """Latest entries restricted to the pks' buckets — the bucket is
-        computed driver-side from the same md5 hash the writer used, so
-        the filter prunes whole ``bucket=N`` partitions before any scan
-        (the table-segment key-index lookup, Spark-shaped)."""
-        log = self._log()
-        if log is None:
-            return None
-        buckets = sorted({bucket_for_key_py(pk, self.config.partition_count) for pk in pks})
-        pruned = log.filter(F.col("bucket").isin(buckets))
-        w = Window.partitionBy("pk", "sk").orderBy(F.desc("version"))
-        return (
-            pruned.withColumn("_rk", F.row_number().over(w))
-            .filter((F.col("_rk") == 1) & ~F.col("deleted"))
-            .drop("_rk")
-        )
+    def _point_lookup(self, keys) -> dict[tuple[str, str], tuple[str, int]]:
+        """Latest live ``(value, version)`` of each stored-form key in
+        ``keys``, read driver-side from the manifest as last loaded (the
+        table-segment key-index lookup, ContainerKeyIndex.java). Opens
+        only the keys' ``bucket=N/`` files — the bucket is the writers'
+        own hash — and skips row groups whose pk statistics exclude every
+        wanted key; only matching rows are kept, so memory follows one
+        row group, not the bucket. Absent and removed keys are left out."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        want = set(keys)
+        pks_by_bucket: dict[str, set[str]] = {}
+        for pk, _ in want:
+            b = bucket_for_key_py(pk, self.config.partition_count)
+            pks_by_bucket.setdefault(f"bucket={b}", set()).add(pk)
+        best: dict[tuple[str, str], tuple] = {}
+        for rel in self._files:
+            pks = pks_by_bucket.get(rel.split(os.sep, 1)[0])
+            if not pks:
+                continue
+            value_set = pa.array(sorted(pks), pa.string())
+            f, p = fsio._split(fsio.join(self.data_path, rel))
+            with pq.ParquetFile(p, filesystem=f) as pf:
+                pk_col = pf.schema_arrow.get_field_index("pk")
+                for i in range(pf.num_row_groups):
+                    st = pf.metadata.row_group(i).column(pk_col).statistics
+                    if st is not None and st.has_min_max and not any(
+                        st.min <= pk <= st.max for pk in pks
+                    ):
+                        continue
+                    t = pf.read_row_group(i, columns=_LOG_COLUMNS)
+                    t = t.filter(pc.is_in(t["pk"], value_set=value_set))
+                    for pk, sk, value, version, deleted in zip(
+                        *(t[c].to_pylist() for c in _LOG_COLUMNS)
+                    ):
+                        k = (pk, sk)
+                        if k in want and (k not in best or version > best[k][1]):
+                            best[k] = (value, version, deleted)
+        return {k: (value, version) for k, (value, version, deleted) in best.items() if not deleted}
 
     def get(self, pk: str, sk: str = "") -> tuple[str, int] | None:
-        latest = self._bucket_pruned([pk])
-        if latest is None:
-            return None
-        rows = latest.filter((F.col("pk") == pk) & (F.col("sk") == sk)).collect()
-        return (rows[0]["value"], rows[0]["version"]) if rows else None
+        self._reload_meta()  # reads see other processes' commits
+        return self._point_lookup([_key(pk, sk)]).get(_key(pk, sk))
 
     def get_all(self, keys: list[tuple[str, str]]) -> dict[tuple[str, str], tuple[str, int]]:
-        pks = [k[0] for k in keys]
-        latest = self._bucket_pruned(pks)
-        if latest is None:
-            return {}
-        rows = latest.filter(F.col("pk").isin(pks)).collect()
-        want = set(keys)
-        return {
-            (r["pk"], r["sk"]): (r["value"], r["version"])
-            for r in rows
-            if (r["pk"], r["sk"]) in want
-        }
+        """Present keys only, each under the key as the caller named it."""
+        self._reload_meta()
+        found = self._point_lookup({_key(pk, sk) for pk, sk in keys})
+        return {(pk, sk): found[_key(pk, sk)] for pk, sk in keys if _key(pk, sk) in found}
 
     def exists(self, pk: str, sk: str = "") -> bool:
         return self.get(pk, sk) is not None

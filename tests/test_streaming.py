@@ -255,6 +255,13 @@ def test_rate_limit_cap_survives_restart(store, events):
         deadline = time.time() + 300
         while time.time() < deadline and sum(batches.values()) < total:
             time.sleep(1)
+        # the counts reach the total inside foreachBatch, before Spark
+        # writes that batch's commit log; stopping then would make the
+        # restarted query re-run the batch. A batch's progress event
+        # follows its commit, so wait for it
+        last = max(batches, default=-1)
+        while time.time() < deadline and (q.lastProgress or {}).get("batchId", -1) < last:
+            time.sleep(0.2)
         q.stop()
         q.awaitTermination(60)
 
