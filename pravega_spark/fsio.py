@@ -823,22 +823,32 @@ def read_bytes_range(path: str, start: int, length: int) -> bytes:
 
 
 def parquet_write_table(table, path: str, use_deprecated_int96: bool = False) -> None:
-    """Write an Arrow table as one parquet file (driver-side hot tier)."""
+    """Write an Arrow table as one parquet file (driver-side hot tier).
+
+    Binary columns (opaque event payloads) are written without column
+    statistics: nothing filters on them, and statistics would store each
+    row group's min and max payload in full in the page headers and the
+    footer. Every other column keeps them: ``offset`` statistics prune
+    slices, ``event_time`` ones serve ``stream_cut_at_time`` and KVT
+    ``pk`` ones skip row groups in point lookups."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
+    stats = [fld.name for fld in table.schema
+             if not (pa.types.is_binary(fld.type) or pa.types.is_large_binary(fld.type))]
+    kw = {"compression": "snappy", "use_deprecated_int96_timestamps": use_deprecated_int96,
+          "write_statistics": stats if len(stats) < len(table.schema) else True}
     f, p = _split(path)
     if f is None:
         os.makedirs(os.path.dirname(p), exist_ok=True)
-        pq.write_table(table, p, compression="snappy",
-                       use_deprecated_int96_timestamps=use_deprecated_int96)
+        pq.write_table(table, p, **kw)
         return
     parent = p.rsplit("/", 1)[0]
     from pyarrow import fs as pafs
 
     if f.get_file_info(parent).type == pafs.FileType.NotFound:
         f.create_dir(parent, recursive=True)
-    pq.write_table(table, p, compression="snappy", filesystem=f,
-                   use_deprecated_int96_timestamps=use_deprecated_int96)
+    pq.write_table(table, p, filesystem=f, **kw)
 
 
 def parquet_read_table(path: str):
@@ -890,6 +900,33 @@ def parquet_rows_and_range(path: str, column: str) -> tuple[int, int | None, int
         lo = st.min if lo is None else min(lo, st.min)
         hi = st.max if hi is None else max(hi, st.max)
     return md.num_rows, lo, hi
+
+
+def parquet_row_groups(path: str, column: str, keep, columns: list[str]):
+    """Yield ``(lo, hi, table)`` for each row group of one parquet file
+    whose ``column`` statistics ``lo``/``hi`` (its min and max) pass
+    ``keep(lo, hi)``. A row group without statistics on ``column`` is
+    always read, with ``lo = hi = None``. Only the ``columns`` the file
+    has are read. Each row group is read single-threaded: the callers
+    are already parallel units (Spark tasks, the sink pump's thread
+    pool), and threads inside one small read only add CPU."""
+    import pyarrow.parquet as pq
+
+    f, p = _split(path)
+    with pq.ParquetFile(p, filesystem=f) as pf:
+        md = pf.metadata
+        idx = next((i for i in range(md.num_columns) if md.schema.column(i).path == column), None)
+        have = set(pf.schema_arrow.names)
+        cols = [c for c in columns if c in have]
+        for i in range(md.num_row_groups):
+            lo = hi = None
+            if idx is not None:
+                st = md.row_group(i).column(idx).statistics
+                if st is not None and st.has_min_max:
+                    lo, hi = st.min, st.max
+                    if not keep(lo, hi):
+                        continue
+            yield lo, hi, pf.read_row_group(i, columns=cols, use_threads=False)
 
 
 def join(*parts: str) -> str:

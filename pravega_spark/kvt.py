@@ -307,7 +307,6 @@ class KeyValueTable:
         row group, not the bucket. Absent and removed keys are left out."""
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         want = set(keys)
         pks_by_bucket: dict[str, set[str]] = {}
@@ -320,23 +319,17 @@ class KeyValueTable:
             if not pks:
                 continue
             value_set = pa.array(sorted(pks), pa.string())
-            f, p = fsio._split(fsio.join(self.data_path, rel))
-            with pq.ParquetFile(p, filesystem=f) as pf:
-                pk_col = pf.schema_arrow.get_field_index("pk")
-                for i in range(pf.num_row_groups):
-                    st = pf.metadata.row_group(i).column(pk_col).statistics
-                    if st is not None and st.has_min_max and not any(
-                        st.min <= pk <= st.max for pk in pks
-                    ):
-                        continue
-                    t = pf.read_row_group(i, columns=_LOG_COLUMNS)
-                    t = t.filter(pc.is_in(t["pk"], value_set=value_set))
-                    for pk, sk, value, version, deleted in zip(
-                        *(t[c].to_pylist() for c in _LOG_COLUMNS)
-                    ):
-                        k = (pk, sk)
-                        if k in want and (k not in best or version > best[k][1]):
-                            best[k] = (value, version, deleted)
+            for _lo, _hi, t in fsio.parquet_row_groups(
+                fsio.join(self.data_path, rel), "pk",
+                lambda lo, hi, pks=pks: any(lo <= pk <= hi for pk in pks), _LOG_COLUMNS,
+            ):
+                t = t.filter(pc.is_in(t["pk"], value_set=value_set))
+                for pk, sk, value, version, deleted in zip(
+                    *(t[c].to_pylist() for c in _LOG_COLUMNS)
+                ):
+                    k = (pk, sk)
+                    if k in want and (k not in best or version > best[k][1]):
+                        best[k] = (value, version, deleted)
         return {k: (value, version) for k, (value, version, deleted) in best.items() if not deleted}
 
     def get(self, pk: str, sk: str = "") -> tuple[str, int] | None:

@@ -1851,7 +1851,11 @@ class StreamStore:
         path = self._stream_path(scope, stream)
         if not fsio.isdir(path):
             return
-        df = self._raw_read(scope, stream)
+        # only files meeting a segment's live [head, tail) are read: a
+        # file wholly below a truncation head is never opened
+        df = self._raw_read(scope, stream, {
+            sid: (head, tails.get(sid, 0)) for sid, head in heads.items() if tails.get(sid, 0) > head
+        })
         cond = None
         for sid, head in heads.items():
             c = (F.col(SEGMENT_ID) == sid) & (F.col(OFFSET) >= head) & (F.col(OFFSET) < tails.get(sid, 0))
@@ -1870,7 +1874,10 @@ class StreamStore:
         # reference compacts per segment under its own container lock,
         # ChunkedSegmentStorage, for the same reason).
         tmp = f"{path}.compact.{uuid.uuid4().hex[:8]}"
-        live.repartition(SEGMENT_ID).write.mode("overwrite").partitionBy(SEGMENT_ID).parquet(tmp)
+        # offset order inside each rewritten file: a slice reads rows in
+        # file order, and that order carries the per-key order contract
+        live.repartition(SEGMENT_ID).sortWithinPartitions(SEGMENT_ID, OFFSET).write.mode(
+            "overwrite").partitionBy(SEGMENT_ID).parquet(tmp)
         tag = uuid.uuid4().hex[:8]
         new_files = {
             sid: [e for e, _n in got]

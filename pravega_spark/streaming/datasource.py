@@ -17,8 +17,18 @@ idiomatic replacement for the reference's reader-group machinery
 Each manifest entry records the offset range ``[lo, hi)`` of one
 committed file, so ``partitions`` hands each slice only the files whose
 range meets the slice's offsets: a tail read opens the few files that
-hold its offsets, whatever the stream's history. Reads go through
-pyarrow on the executors and still filter rows on ``offset``.
+hold its offsets, whatever the stream's history. A slice is read on
+the executors file by file and row group by row group with plain
+single-threaded pyarrow reads (``fsio.parquet_row_groups``): row groups
+whose ``offset`` statistics miss the slice are skipped, and rows are
+filtered on ``offset`` only in row groups that straddle a bound. Each
+Spark task is already one parallel unit, so a read uses no thread pool
+of its own, and the JVM-free process never imports the Arrow Dataset
+scanner. A catch-up slice of hundreds of files is read one file after
+another as well: a small file's open and read hold the GIL for most of
+their time, and overlapping them on a thread pool doubled such a
+slice's CPU without a steady fall in its wall time (200 files of 25
+rows each, 4 vCPUs).
 
 Options: ``root``, ``scope``, ``stream``, optional ``start_cut`` /
 ``end_cut`` (JSON StreamCuts — end_cut makes a *bounded* stream, the
@@ -62,9 +72,10 @@ ENVELOPE = StructType(
 
 
 class SegmentSlice(InputPartition):
-    def __init__(self, path: str, segment_id: int, start: int, end: int,
-                 files: list[str] = ()):
-        self.path = path
+    def __init__(self, root: str, scope: str, stream: str, segment_id: int,
+                 start: int, end: int, files: list[str] = ()):
+        self.root, self.scope, self.stream = root, scope, stream
+        self.path = os.path.join(root, "streams", scope, stream)
         self.segment_id = segment_id
         self.start = start
         self.end = end
@@ -78,37 +89,35 @@ class SegmentSlice(InputPartition):
 # slice of N small file-chunks must NOT surface as N small batches
 _BATCH_ROWS = 131_072
 
+# re-plans of one slice whose planned files a compaction removed
+_REPLANS = 5
 
-def _read_slice_table(sl: SegmentSlice):
-    """One segment slice as a single normalized Arrow table (or None).
 
-    Shared by the executor-side streaming read AND the driver-side pump
-    fast path (streaming/sink.py): the slice is materialized as one
-    table, columns normalized table-wide (one cast per column, not per
-    chunk), chunks combined. Row order = manifest file order = offset
-    order, which carries the per-key order contract.
-    """
+def _as_envelope(t, want: dict):
+    """``t`` with exactly the ``want`` columns and types: a column of
+    another type is cast, a missing one becomes nulls. A conforming
+    table is returned as is."""
     import pyarrow as pa
-    import pyarrow.dataset as ds
+
+    if t.schema.names == list(want) and all(
+        t.schema.field(n).type == typ for n, typ in want.items()
+    ):
+        return t
+    return pa.table({
+        n: t[n].cast(typ) if n in t.schema.names else pa.nulls(t.num_rows, typ)
+        for n, typ in want.items()
+    })
+
+
+def _read_planned(sl: SegmentSlice):
+    """The rows of ``sl.files`` in ``[sl.start, sl.end)`` as one table
+    of the stored envelope columns, or None when there are none."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from pravega_spark import fsio
 
-    if not sl.files:
-        return None
-    # URI roots (object stores, fsio-registered filesystems) resolve to
-    # a pyarrow filesystem + normalized path; local stays on the os
-    # fast path. ds.dataset(filesystem=None) means "infer local".
-    fs, base = fsio._split(sl.path)
-    join = (lambda *p: "/".join(x.rstrip("/") for x in p)) if fs is not None else os.path.join
-    dataset = ds.dataset([join(base, f) for f in sl.files], format="parquet", filesystem=fs)
-    flt = (ds.field("offset") >= sl.start) & (ds.field("offset") < sl.end)
-    names = [f.name for f in ENVELOPE.fields]
-    have = set(dataset.schema.names)
-    cols = [n for n in names if n in have and n != "segment_id"]
-    table = dataset.to_table(filter=flt, columns=cols)
-    n = table.num_rows
-    if n == 0:
-        return None
+    # segment_id lives in the directory name, not in the files
     want = {
         "routing_key": pa.string(),
         "offset": pa.int64(),
@@ -116,25 +125,74 @@ def _read_slice_table(sl: SegmentSlice):
         "ingest_time": pa.timestamp("us"),
         "payload": pa.binary(),
     }
-    arrays, fields = [], []
-    for f in ENVELOPE.fields:
-        if f.name == "segment_id":
-            # constant column, built without a Python-list round trip
-            arrays.append(pa.nulls(n, pa.int64()).fill_null(sl.segment_id))
-            fields.append(pa.field("segment_id", pa.int64()))
-        elif f.name in table.schema.names:
-            col = table.column(f.name)
-            typ = want.get(f.name)
-            if f.name == "payload" and not pa.types.is_binary(col.type):
-                col = col.cast(pa.binary())
-            elif typ is not None and col.type != typ and f.name != "routing_key":
-                col = col.cast(typ)
-            arrays.append(col)
-            fields.append(pa.field(f.name, col.type))
-        else:
-            arrays.append(pa.nulls(n, type=want[f.name]))
-            fields.append(pa.field(f.name, want[f.name]))
-    return pa.Table.from_arrays(arrays, schema=pa.schema(fields)).combine_chunks()
+    start, end = sl.start, sl.end
+    parts = []
+    for rel in sl.files:
+        for lo, hi, t in fsio.parquet_row_groups(
+            fsio.join(sl.path, rel), "offset", lambda lo, hi: lo < end and hi >= start, list(want)
+        ):
+            if lo is None or lo < start or hi >= end:  # straddles a bound
+                off = t["offset"]
+                t = t.filter(pc.and_(pc.greater_equal(off, start), pc.less(off, end)))
+            if t.num_rows:
+                parts.append(t)
+    if not parts:
+        return None
+    # files of one writer share a schema: cast once, after the concat
+    if any(p.schema != parts[0].schema for p in parts[1:]):
+        parts = [_as_envelope(p, want) for p in parts]
+    return _as_envelope(pa.concat_tables(parts), want)
+
+
+def _read_slice_table(sl: SegmentSlice):
+    """One segment slice as a single envelope-typed Arrow table (or None).
+
+    Shared by the executor-side streaming read AND the driver-side pump
+    fast path (streaming/sink.py). Each planned file is read row group
+    by row group (``fsio.parquet_row_groups``): a row group whose
+    ``offset`` statistics miss ``[start, end)`` is skipped, and rows are
+    filtered only in row groups that straddle a bound. Columns are cast
+    to the envelope types only where the stored types differ, and
+    columns a file lacks become nulls. Row order = manifest file order =
+    offset order, which carries the per-key order contract.
+
+    Compaction deletes a segment's original files right after its
+    manifest flip, and every live row keeps its offset, so a planned
+    file that has gone is not an error: the slice is re-planned from the
+    current manifest (bounded retries) and read again. A slice that
+    starts below the current head raises TruncatedDataException instead,
+    as ``StreamStore.read`` does: its rows below the head are gone.
+    """
+    import time
+
+    import pyarrow as pa
+
+    from pravega_spark.errors import TruncatedDataException
+
+    if not sl.files:
+        return None
+    for attempt in range(_REPLANS):
+        try:
+            table = _read_planned(sl)
+            break
+        except FileNotFoundError:
+            if attempt == _REPLANS - 1:
+                raise
+            time.sleep(0.05 * (attempt + 1))
+            # a re-plan sees only rows at or above the current head: a
+            # slice that starts below it lost rows to truncation
+            head = _load_heads(sl.root, sl.scope, sl.stream).get(sl.segment_id, 0)
+            if sl.start < head:
+                raise TruncatedDataException(
+                    f"segment {sl.segment_id}: slice start {sl.start} < head {head}"
+                )
+            [sl] = plan_slices(sl.root, sl.scope, sl.stream,
+                               {str(sl.segment_id): sl.start}, {str(sl.segment_id): sl.end})
+    if table is None:
+        return None
+    # constant column, built without a Python-list round trip
+    seg = pa.nulls(table.num_rows, pa.int64()).fill_null(sl.segment_id)
+    return table.add_column(1, "segment_id", seg).combine_chunks()
 
 
 def _read_slice(sl: SegmentSlice):
@@ -209,7 +267,6 @@ def plan_slices(root: str, scope: str, stream: str,
     sink's driver-side pump."""
     from pravega_spark.metadata import entries_in_range
 
-    path = os.path.join(root, "streams", scope, stream)
     ranges = {
         int(sid): (int(start.get(sid, 0)), int(hi))
         for sid, hi in end.items()
@@ -219,7 +276,8 @@ def plan_slices(root: str, scope: str, stream: str,
     # manifest shards are never touched
     entries = _load_entries(root, scope, stream, set(ranges)) if ranges else {}
     return [
-        SegmentSlice(path, sid, lo, hi, entries_in_range(entries.get(sid, []), lo, hi))
+        SegmentSlice(root, scope, stream, sid, lo, hi,
+                     entries_in_range(entries.get(sid, []), lo, hi))
         for sid, (lo, hi) in ranges.items()
     ]
 
@@ -378,7 +436,7 @@ class PravegaStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         self._advance(end)  # authoritative plan boundary
         out = plan_slices(self.root, self.scope, self.stream, start, end)
-        return out or [SegmentSlice(self.path, -1, 0, 0)]
+        return out or [SegmentSlice(self.root, self.scope, self.stream, -1, 0, 0)]
 
     def read(self, partition: SegmentSlice) -> Iterator:
         if partition.segment_id < 0:

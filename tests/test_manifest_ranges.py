@@ -217,3 +217,36 @@ def test_entries_in_range_is_half_open():
     assert entries_in_range(entries, 9, 11) == ["b", "c"]
     assert entries_in_range(entries, 12, 20) == []
     assert entries_in_range(entries, 3, 3) == []
+
+
+def test_compaction_never_opens_files_below_the_head(spark, store, monkeypatch):
+    """After a truncate past whole files, compaction's live-row scan
+    reads only the files meeting each segment's [head, tail), and the
+    rewritten rows are exactly the live rows read before it."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    _mk(store, n_segments=1)
+    for b in range(6):
+        store.append_events("s", "ev", _events(f"t{b}", 5), writer_id="w", batch_seq=b)
+    _doc, by_sid = _entries(store)
+    store.truncate_stream("s", "ev", StreamCut.of({0: 12}))
+    before = sorted(tuple(r) for r in store.read("s", "ev").select(*COLS).collect())
+    assert [r[1] for r in before] == list(range(12, 30))
+
+    opened = []
+    parquet = DataFrameReader.parquet
+    monkeypatch.setattr(DataFrameReader, "parquet",
+                        lambda self, *paths, **kw: opened.extend(paths) or parquet(self, *paths, **kw))
+    store.compact_stream("s", "ev")
+    below = [name for name, _lo, hi in by_sid[0] if hi <= 12]
+    live = [name for name, _lo, hi in by_sid[0] if hi > 12]
+    assert len(below) == 2 and len(live) == 4
+    assert not any(p.endswith(name) for p in opened for name in below)
+    assert all(any(p.endswith(name) for p in opened) for name in live)
+
+    monkeypatch.undo()
+    after = sorted(tuple(r) for r in store.read("s", "ev").select(*COLS).collect())
+    assert after == before
+    _doc, by_sid = _entries(store)
+    assert [e[1:] for e in by_sid[0]] == [[12, 30]]
+    _check_ranges(store)

@@ -139,12 +139,12 @@ def test_compact_abandons_when_commit_races_planning(spark, tmp_path):
     real_raw = st._raw_read
     raced = {}
 
-    def racing_raw(scope, stream):
+    def racing_raw(scope, stream, bounds=None):
         # fires AFTER compaction's plan snapshot, BEFORE its rewrite
         if not raced:
             raced["x"] = True
             st.append_events(scope, stream, [{"routing_key": "b", "v": 2}])
-        return real_raw(scope, stream)
+        return real_raw(scope, stream, bounds)
 
     st._raw_read = racing_raw
     st.compact_stream("sc", "s")
@@ -175,12 +175,12 @@ def test_compact_flips_untouched_segments_despite_racing_commit(spark, tmp_path)
     real_raw = st._raw_read
     raced = {}
 
-    def racing_raw(scope, stream):
+    def racing_raw(scope, stream, bounds=None):
         # fires AFTER compaction's plan snapshot, BEFORE its rewrite
         if not raced:
             raced["x"] = True
             st.append_events(scope, stream, [{"routing_key": key_b, "v": 3}])
-        return real_raw(scope, stream)
+        return real_raw(scope, stream, bounds)
 
     st._raw_read = racing_raw
     st.compact_stream("sc", "s")
