@@ -903,13 +903,15 @@ def parquet_rows_and_range(path: str, column: str) -> tuple[int, int | None, int
 
 
 def parquet_row_groups(path: str, column: str, keep, columns: list[str]):
-    """Yield ``(lo, hi, table)`` for each row group of one parquet file
-    whose ``column`` statistics ``lo``/``hi`` (its min and max) pass
-    ``keep(lo, hi)``. A row group without statistics on ``column`` is
-    always read, with ``lo = hi = None``. Only the ``columns`` the file
-    has are read. Each row group is read single-threaded: the callers
-    are already parallel units (Spark tasks, the sink pump's thread
-    pool), and threads inside one small read only add CPU."""
+    """Yield ``(i, lo, hi, table)`` for each row group ``i`` of one
+    parquet file that ``keep(i, lo, hi)`` accepts, where ``lo``/``hi``
+    are the row group's ``column`` statistics (its min and max), or
+    ``None`` when it has none. ``keep`` is asked about every row group,
+    in order, so a caller can also note the file's whole pk-range
+    summary from one footer read. Only the ``columns`` the file has are
+    read. Each row group is read single-threaded: the callers are
+    already parallel units (Spark tasks, the sink pump's thread pool),
+    and threads inside one small read only add CPU."""
     import pyarrow.parquet as pq
 
     f, p = _split(path)
@@ -924,9 +926,8 @@ def parquet_row_groups(path: str, column: str, keep, columns: list[str]):
                 st = md.row_group(i).column(idx).statistics
                 if st is not None and st.has_min_max:
                     lo, hi = st.min, st.max
-                    if not keep(lo, hi):
-                        continue
-            yield lo, hi, pf.read_row_group(i, columns=cols, use_threads=False)
+            if keep(i, lo, hi):
+                yield i, lo, hi, pf.read_row_group(i, columns=cols, use_threads=False)
 
 
 def join(*parts: str) -> str:

@@ -25,10 +25,27 @@ object-store roots like the rest of the engine.
 Point ops (``get``, ``get_all``, ``exists`` and the CAS read of a
 conditional update) are driver-side Arrow key lookups, the
 table-segment key index (ContainerKeyIndex.java) over Parquet: only
-the keys' ``bucket=N/`` manifest entries are opened, row groups whose
+the keys' ``bucket=N/`` manifest entries are consulted, row groups whose
 pk min/max statistics exclude every wanted key are skipped, and the
 max-version row per key wins — no Spark job, so a table opened with
 ``spark=None`` serves point ops and updates up to ``KVT_HOT_MAX_ROWS``.
+Like the reference's in-memory key cache in front of the table segment
+(ContainerKeyIndex.java), a process-wide LRU (``row_cache``, bounded at
+``ROW_CACHE_BYTES`` of Arrow data) keeps each row group already read, as
+the Arrow table it was read into, and each file's per-row-group pk
+ranges, keyed by the file's full path; a hot update also caches the
+table it has just written. A warm lookup therefore opens no file it has
+seen before, and its cost no longer grows with the files written since
+the last ``compact()``. The cache pays off when lookups come back to
+the row groups they read before (the same keys, or keys written in the
+same batches) while those still fit the budget; a lookup that misses
+reads and filters its row groups as an uncached one would, so traffic
+without that locality pays only the bookkeeping and the evictions on
+top. Nothing is
+ever invalidated, because nothing cached can go stale: log files are
+immutable and uuid-tagged, and the manifest reloaded from the meta doc
+stays the only source of visibility, so a file that compaction or
+``fsck`` removed is never asked for again and ages out of the LRU.
 ``snapshot()``, the iterators, the delta iterator and ``compact()``
 resolve the latest version per key with a Spark window (max-version
 row) over the whole log; ``compact()`` rewrites the log keeping only
@@ -39,9 +56,13 @@ as the change feed (delta iterator) for free.
 
 from __future__ import annotations
 
+import functools
 import os
+import sys
+import threading
 import time
 import uuid
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -66,6 +87,128 @@ MUST_NOT_EXIST = -2
 KVT_HOT_MAX_ROWS = int(os.environ.get("PRAVEGA_SPARK_KVT_HOT_MAX_ROWS", "100000"))
 
 _LOG_COLUMNS = ["pk", "sk", "value", "version", "deleted"]
+
+# Byte budget of the process-wide row-group cache of the point path,
+# counted as the Arrow buffer bytes of the row groups it holds: about
+# four of the largest hot batches (KVT_HOT_MAX_ROWS rows of short keys
+# and values take some 7 MiB), and the most the cache adds to a process
+ROW_CACHE_BYTES = 32 << 20
+
+
+class RowGroupCache:
+    """Byte-bounded LRU of log rows as read, Arrow tables: one row group
+    under ``(path, i)``, a whole file its writer cached under ``(path,)``,
+    and file summaries (each row group's pk ``(lo, hi)``) under ``path``.
+    An entry larger than the whole budget is not kept. ``hits`` and
+    ``misses`` count the row groups lookups took from memory and read
+    from their files."""
+
+    def __init__(self, budget: int):
+        self.budget = budget
+        self.held = 0
+        self.hits = self.misses = 0
+        self._entries: OrderedDict = OrderedDict()  # key -> (value, bytes)
+        self._mu = threading.Lock()
+
+    def get(self, key):
+        with self._mu:
+            hit = self._entries.get(key)
+            if hit is None:
+                return None
+            self._entries.move_to_end(key)
+            return hit[0]
+
+    def put(self, key, value, nbytes: int) -> None:
+        if nbytes > self.budget:
+            return
+        with self._mu:
+            old = self._entries.pop(key, None)
+            if old is not None:
+                self.held -= old[1]
+            self._entries[key] = (value, nbytes)
+            self.held += nbytes
+            while self.held > self.budget:
+                _, (_, n) = self._entries.popitem(last=False)
+                self.held -= n
+
+    def tally(self, hits: int, misses: int) -> None:
+        with self._mu:
+            self.hits += hits
+            self.misses += misses
+
+    def clear(self) -> None:
+        with self._mu:
+            self._entries.clear()
+            self.held = 0
+
+
+row_cache = RowGroupCache(ROW_CACHE_BYTES)
+
+
+@functools.cache
+def _log_schema():
+    import pyarrow as pa
+
+    return pa.schema([
+        ("pk", pa.string()), ("sk", pa.string()), ("value", pa.string()),
+        ("version", pa.int64()), ("deleted", pa.bool_()),
+    ])
+
+
+def _summary_bytes(ranges: list) -> int:
+    size = sys.getsizeof
+    return size(ranges) + sum(size(r) + size(r[0]) + size(r[1]) for r in ranges)
+
+
+def _file_tables(path: str, pks: set[str], value_set):
+    """Yield Arrow tables holding every row of one log file whose pk is
+    in ``pks``: the whole file when its writer cached it, else each row
+    group whose pk range may hold one of ``pks``. Cached ones come from
+    ``row_cache`` whole. The others are read one at a time, cached as
+    read, and cut to ``value_set`` (the wanted pks) before they are
+    yielded, as an uncached lookup cut them, so a lookup holds at most
+    one uncached row group beyond its matches. A file whose summary is
+    cached is opened only when one of its wanted row groups is not."""
+    import pyarrow.compute as pc
+
+    whole = row_cache.get((path,))  # the rows its writer cached
+    if whole is not None:
+        row_cache.tally(1, 0)
+        yield whole
+        return
+
+    def wanted(lo, hi) -> bool:
+        return lo is None or any(lo <= pk <= hi for pk in pks)
+
+    ranges = row_cache.get(path)
+    if ranges is not None:
+        hits = [row_cache.get((path, i)) for i, (lo, hi) in enumerate(ranges) if wanted(lo, hi)]
+        if all(t is not None for t in hits):
+            row_cache.tally(len(hits), 0)
+            yield from hits
+            return
+    footer: list[tuple] = []
+    hits = []
+
+    def keep(i, lo, hi) -> bool:
+        footer.append((lo, hi))
+        if not wanted(lo, hi):
+            return False
+        t = row_cache.get((path, i))
+        if t is not None:
+            hits.append(t)
+        return t is None
+
+    misses = 0
+    for i, _lo, _hi, t in fsio.parquet_row_groups(path, "pk", keep, _LOG_COLUMNS):
+        misses += 1
+        if not t.schema.equals(_log_schema()):  # one schema for the lookup's concat
+            t = t.select(_LOG_COLUMNS).cast(_log_schema())
+        row_cache.put((path, i), t, t.get_total_buffer_size())
+        yield t.filter(pc.is_in(t["pk"], value_set=value_set))
+    yield from hits
+    row_cache.tally(len(hits), misses)
+    row_cache.put(path, footer, _summary_bytes(footer))
 
 
 def _key(pk: str, sk: str | None) -> tuple[str, str]:
@@ -265,18 +408,19 @@ class KeyValueTable:
         produces (bucket rides in the partition dir, not the file)."""
         import pyarrow as pa
 
-        schema = pa.schema([
-            ("pk", pa.string()), ("sk", pa.string()), ("value", pa.string()),
-            ("version", pa.int64()), ("deleted", pa.bool_()),
-        ])
+        schema = _log_schema()
         by_bucket: dict[int, list[dict]] = {}
         for r in rows:
             by_bucket.setdefault(bucket_for_key_py(r["pk"], n_buckets), []).append(r)
         out: list[str] = []
         for b, rs in sorted(by_bucket.items()):
             rel = os.path.join(f"bucket={b}", f"v{version}-{tag}-hot.parquet")
-            fsio.parquet_write_table(pa.Table.from_pylist(rs, schema=schema),
-                                     fsio.join(self.data_path, rel))
+            path = fsio.join(self.data_path, rel)
+            t = pa.Table.from_pylist(rs, schema=schema)
+            fsio.parquet_write_table(t, path)
+            # the next CAS read would read these rows straight back: cache
+            # them whole-file, which holds whatever row groups the writer made
+            row_cache.put((path,), t, t.get_total_buffer_size())
             out.append(rel)
         return out
 
@@ -300,11 +444,15 @@ class KeyValueTable:
     def _point_lookup(self, keys) -> dict[tuple[str, str], tuple[str, int]]:
         """Latest live ``(value, version)`` of each stored-form key in
         ``keys``, read driver-side from the manifest as last loaded (the
-        table-segment key-index lookup, ContainerKeyIndex.java). Opens
+        table-segment key-index lookup, ContainerKeyIndex.java). Consults
         only the keys' ``bucket=N/`` files — the bucket is the writers'
         own hash — and skips row groups whose pk statistics exclude every
-        wanted key; only matching rows are kept, so memory follows one
-        row group, not the bucket. Absent and removed keys are left out."""
+        wanted key. Row groups and per-file pk ranges already read or
+        written come from ``row_cache`` (the module docstring says why it
+        needs no invalidation); the others are read one at a time, as
+        before the cache, and cached. All of them are then cut to the
+        wanted pks in one Arrow filter, so only matching rows are ever
+        decoded, cached or not. Absent and removed keys are left out."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -313,23 +461,21 @@ class KeyValueTable:
         for pk, _ in want:
             b = bucket_for_key_py(pk, self.config.partition_count)
             pks_by_bucket.setdefault(f"bucket={b}", set()).add(pk)
-        best: dict[tuple[str, str], tuple] = {}
+        value_set = pa.array(sorted({pk for pk, _ in want}), pa.string())
+        parts = []
         for rel in self._files:
             pks = pks_by_bucket.get(rel.split(os.sep, 1)[0])
-            if not pks:
-                continue
-            value_set = pa.array(sorted(pks), pa.string())
-            for _lo, _hi, t in fsio.parquet_row_groups(
-                fsio.join(self.data_path, rel), "pk",
-                lambda lo, hi, pks=pks: any(lo <= pk <= hi for pk in pks), _LOG_COLUMNS,
-            ):
-                t = t.filter(pc.is_in(t["pk"], value_set=value_set))
-                for pk, sk, value, version, deleted in zip(
-                    *(t[c].to_pylist() for c in _LOG_COLUMNS)
-                ):
-                    k = (pk, sk)
-                    if k in want and (k not in best or version > best[k][1]):
-                        best[k] = (value, version, deleted)
+            if pks:
+                parts.extend(_file_tables(fsio.join(self.data_path, rel), pks, value_set))
+        if not parts:
+            return {}
+        t = pa.concat_tables(parts)
+        t = t.filter(pc.is_in(t["pk"], value_set=value_set))
+        best: dict[tuple[str, str], tuple] = {}
+        for pk, sk, value, version, deleted in zip(*(t[c].to_pylist() for c in _LOG_COLUMNS)):
+            k = (pk, sk)
+            if k in want and (k not in best or version > best[k][1]):
+                best[k] = (value, version, deleted)
         return {k: (value, version) for k, (value, version, deleted) in best.items() if not deleted}
 
     def get(self, pk: str, sk: str = "") -> tuple[str, int] | None:

@@ -603,49 +603,29 @@ class StreamStore:
         distributed files interleave freely in one stream.
         """
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        info = self.meta.get_stream(scope, stream)
-        if info["sealed"]:
-            raise StreamSealedException(f"{scope}/{stream} is sealed")
-        writer_marker = None
-        if writer_id is not None and batch_seq is not None:
-            if batch_seq <= self._writer_seq(scope, stream).get(writer_id, -1):
-                return self.meta.tail_offsets(scope, stream)  # duplicate retry
-            writer_marker = (writer_id, batch_seq)
-        # column-wise build, same semantics as Table.from_pylist (the
-        # FIRST event's keys define the schema; missing keys -> null)
-        # but ~2x faster on payload-heavy batches: from_pylist's
-        # per-row dict scan was 9.9 ms of a 17 ms 100 KiB-batch append
-        # (measured r8), and it runs GIL-bound, so concurrent writers'
-        # prep stole time from the commit-lock holder's critical
-        # section on top of the latency itself
-        names = list(events[0].keys()) if events else []
-        tbl = pa.table({k: [r.get(k) for r in events] for k in names})
-        for name in tbl.column_names:
-            if pa.types.is_null(tbl[name].type):
-                # an all-null column would be written as a NULL-typed
-                # parquet column and conflict with later typed appends
-                raise ValueError(
-                    f"append_events column {name!r} is all-null; give it a "
-                    "typed value in at least one event or omit the key"
-                )
-        ts_us = pa.timestamp("us", tz="UTC")
-        if routing_key != ROUTING_KEY:
-            tbl = tbl.append_column(ROUTING_KEY, pc.cast(tbl[routing_key], pa.string()))
-        elif not pa.types.is_string(tbl[ROUTING_KEY].type):
-            idx = tbl.column_names.index(ROUTING_KEY)
-            tbl = tbl.set_column(idx, ROUTING_KEY, pc.cast(tbl[ROUTING_KEY], pa.string()))
-        idx = tbl.column_names.index(ROUTING_KEY)
-        tbl = tbl.set_column(idx, ROUTING_KEY, pc.fill_null(tbl[ROUTING_KEY], ""))
-        if event_time_key is not None:
-            col = pc.cast(tbl[event_time_key], ts_us)
-            if EVENT_TIME in tbl.column_names:
-                tbl = tbl.set_column(tbl.column_names.index(EVENT_TIME), EVENT_TIME, col)
-            else:
-                tbl = tbl.append_column(EVENT_TIME, col)
-        return self._hot_commit(
-            scope, stream, tbl, [], writer_marker, txn_marker=None,
+        def build():
+            # column-wise build, same semantics as Table.from_pylist (the
+            # FIRST event's keys define the schema; missing keys -> null)
+            # but ~2x faster on payload-heavy batches: from_pylist's
+            # per-row dict scan was 9.9 ms of a 17 ms 100 KiB-batch append
+            # (measured r8), and it runs GIL-bound, so concurrent writers'
+            # prep stole time from the commit-lock holder's critical
+            # section on top of the latency itself
+            names = list(events[0].keys()) if events else []
+            tbl = pa.table({k: [r.get(k) for r in events] for k in names})
+            for name in tbl.column_names:
+                if pa.types.is_null(tbl[name].type):
+                    # an all-null column would be written as a NULL-typed
+                    # parquet column and conflict with later typed appends
+                    raise ValueError(
+                        f"append_events column {name!r} is all-null; give it a "
+                        "typed value in at least one event or omit the key"
+                    )
+            return tbl
+
+        return self._hot_append(
+            scope, stream, build, routing_key, event_time_key, writer_id, batch_seq,
             attribute_updates=attribute_updates,
         )
 
@@ -669,6 +649,23 @@ class StreamStore:
         readNextEvent feeding EventStreamWriterImpl.writeEvent) — the
         caller is responsible for bounding the table to driver memory.
         """
+        # a table's own event_time column is committed as it stands;
+        # append_events casts even an event_time_key of "event_time"
+        event_time = event_time_col if event_time_col != EVENT_TIME else None
+        return self._hot_append(
+            scope, stream, lambda: tbl, routing_key_col, event_time, writer_id, batch_seq
+        )
+
+    def _hot_append(self, scope: str, stream: str, build, routing_key: str,
+                    event_time: str | None, writer_id: str | None, batch_seq: int | None,
+                    attribute_updates: dict[int, list[tuple]] | None = None) -> dict[int, int]:
+        """The ingest normalizer of both hot appends: refuse a sealed
+        stream, answer a duplicate ``(writer_id, batch_seq)`` retry with
+        the current tails, and only then take the Arrow table ``build()``
+        returns, set its ``routing_key`` envelope column from the
+        ``routing_key`` column cast to string with nulls as ``""``, set
+        ``event_time`` from the ``event_time`` column cast to UTC
+        microseconds when one is named, and commit it."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -680,21 +677,23 @@ class StreamStore:
             if batch_seq <= self._writer_seq(scope, stream).get(writer_id, -1):
                 return self.meta.tail_offsets(scope, stream)  # duplicate retry
             writer_marker = (writer_id, batch_seq)
-        ts_us = pa.timestamp("us", tz="UTC")
-        if routing_key_col != ROUTING_KEY:
-            tbl = tbl.append_column(ROUTING_KEY, pc.cast(tbl[routing_key_col], pa.string()))
-        elif not pa.types.is_string(tbl[ROUTING_KEY].type):
-            idx = tbl.column_names.index(ROUTING_KEY)
-            tbl = tbl.set_column(idx, ROUTING_KEY, pc.cast(tbl[ROUTING_KEY], pa.string()))
-        idx = tbl.column_names.index(ROUTING_KEY)
-        tbl = tbl.set_column(idx, ROUTING_KEY, pc.fill_null(tbl[ROUTING_KEY], ""))
-        if event_time_col is not None and event_time_col != EVENT_TIME:
-            col = pc.cast(tbl[event_time_col], ts_us)
-            if EVENT_TIME in tbl.column_names:
-                tbl = tbl.set_column(tbl.column_names.index(EVENT_TIME), EVENT_TIME, col)
-            else:
-                tbl = tbl.append_column(EVENT_TIME, col)
-        return self._hot_commit(scope, stream, tbl, [], writer_marker, txn_marker=None)
+        tbl = build()
+
+        def put(tbl, name, col):
+            if name in tbl.column_names:
+                return tbl.set_column(tbl.column_names.index(name), name, col)
+            return tbl.append_column(name, col)
+
+        key = tbl[routing_key]
+        if not pa.types.is_string(key.type):
+            key = pc.cast(key, pa.string())
+        tbl = put(tbl, ROUTING_KEY, pc.fill_null(key, ""))
+        if event_time is not None:
+            tbl = put(tbl, EVENT_TIME, pc.cast(tbl[event_time], pa.timestamp("us", tz="UTC")))
+        return self._hot_commit(
+            scope, stream, tbl, [], writer_marker, txn_marker=None,
+            attribute_updates=attribute_updates,
+        )
 
     @staticmethod
     def _already_applied(doc: dict, writer_marker, txn_marker) -> bool:

@@ -128,8 +128,9 @@ def _read_planned(sl: SegmentSlice):
     start, end = sl.start, sl.end
     parts = []
     for rel in sl.files:
-        for lo, hi, t in fsio.parquet_row_groups(
-            fsio.join(sl.path, rel), "offset", lambda lo, hi: lo < end and hi >= start, list(want)
+        for _i, lo, hi, t in fsio.parquet_row_groups(
+            fsio.join(sl.path, rel), "offset",
+            lambda _i, lo, hi: lo is None or (lo < end and hi >= start), list(want),
         ):
             if lo is None or lo < start or hi >= end:  # straddles a bound
                 off = t["offset"]

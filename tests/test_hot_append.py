@@ -118,3 +118,37 @@ def test_hot_files_compact_away(store):
     n_after = len(store._list_data_files(path))
     assert n_after <= 2  # one file per live segment
     assert store.read("s", "ev").count() == 100
+
+
+def test_hot_appends_share_one_normalizer(store, monkeypatch):
+    """``append_events`` and ``append_table`` normalize alike: a non-string
+    routing key is cast to string and a null one becomes "". They differ
+    in one pinned way: ``append_events`` casts an ``event_time_key`` of
+    "event_time" to UTC microseconds, while ``append_table`` commits a
+    table's own ``event_time`` column as it stands."""
+    import pyarrow as pa
+
+    _mk(store)
+    committed = []
+    commit = store._hot_commit
+    monkeypatch.setattr(store, "_hot_commit", lambda scope, stream, tbl, *a, **kw:
+                        committed.append(tbl) or commit(scope, stream, tbl, *a, **kw))
+    t0 = datetime.datetime(2024, 1, 1)
+    utc_us, ms = pa.timestamp("us", tz="UTC"), pa.timestamp("ms")
+    store.append_events("s", "ev", [{"key": 7, "event_time": t0, "payload": "a"},
+                                    {"key": None, "event_time": t0, "payload": "b"}],
+                        routing_key="key", event_time_key="event_time")
+    tbl = pa.table({"routing_key": pa.array([7, None], pa.int64()),
+                    "event_time": pa.array([t0, t0], ms), "payload": ["c", "d"]})
+    store.append_table("s", "ev", tbl, event_time_col="event_time")
+    store.append_table("s", "ev", tbl.rename_columns(["routing_key", "ts", "payload"]),
+                       event_time_col="ts")
+    events, own, renamed = committed
+    for t in committed:
+        assert t["routing_key"].type == pa.string()
+        assert t["routing_key"].to_pylist() == ["7", ""]
+    assert events["event_time"].type == utc_us
+    assert own["event_time"].type == ms
+    assert renamed["event_time"].type == utc_us
+    assert events["key"].to_pylist() == [7, None]  # the source column stays
+    assert sum(store.meta.tail_offsets("s", "ev").values()) == 6

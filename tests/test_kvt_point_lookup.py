@@ -67,7 +67,8 @@ def test_point_path_equals_snapshot_across_file_flavors(spark, tmp_path, monkeyp
 
 def test_row_groups_outside_the_keys_pk_range_are_not_read(spark, tmp_path, monkeypatch):
     """A file holding many pks is read one row group at a time, and a
-    row group whose pk min/max excludes every wanted key is skipped."""
+    row group whose pk min/max excludes every wanted key is skipped;
+    a warm lookup reads none."""
     write_table = pq.write_table
     monkeypatch.setattr(pq, "write_table",
                         lambda *a, **kw: write_table(*a, row_group_size=4, **kw))
@@ -80,10 +81,14 @@ def test_row_groups_outside_the_keys_pk_range_are_not_read(spark, tmp_path, monk
     read_row_group = pq.ParquetFile.read_row_group
     monkeypatch.setattr(pq.ParquetFile, "read_row_group",
                         lambda self, i, **kw: reads.append(i) or read_row_group(self, i, **kw))
+    kvt_mod.row_cache.clear()
     assert t.get("k021") is None  # removed in the second file
+    kvt_mod.row_cache.clear()
     assert t.get("k020") == ("vk020", 1)
-    # two lookups, each one row group in each of the two files
+    # two cold lookups, each one row group in each of the two files
     assert len(reads) == 4
+    assert t.get("k020") == ("vk020", 1)
+    assert len(reads) == 4  # the warm lookup reads no row group
     _assert_point_path_equals_snapshot(t, [(k, "") for k in keys] + [("k999", "")])
 
 
