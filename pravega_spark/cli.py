@@ -14,7 +14,8 @@ Mirrors the same command groups over the Spark-native engine:
 
 The SparkSession is created lazily — metadata-only commands (scope ops,
 stream list/info), stream append and kvt create/delete/put/get never
-start a JVM; only stream read and kvt list do.
+start a JVM; stream read does, and kvt list only for a table whose log
+is above the driver-side scan bound (``kvt.ROW_CACHE_BYTES``).
 """
 
 from __future__ import annotations
@@ -139,31 +140,33 @@ def cmd_stream_append(args) -> int:
 
 
 def cmd_kvt(args) -> int:
+    from pravega_spark.errors import SparkRequiredException
     from pravega_spark.kvt import KeyValueTableManager
 
     scope, name = _split_qualified(args.name)
-    if args.action != "list":
-        # DDL, put and get need no JVM: metadata docs, driver-side
-        # parquet writes and Arrow key lookups (the lazy-Spark contract)
-        mgr = KeyValueTableManager(None, args.root)
-        if args.action == "create":
-            # boolean reports whether the table was NEWLY created
-            # (scripts probe it for already-exists) alongside the r6
-            # qualified name
-            t = mgr.create_key_value_table(scope, name)
-            print(json.dumps({"created": t.was_created, "table": f"{scope}/{name}"}))
-        elif args.action == "delete":
-            print(json.dumps({"deleted": mgr.delete_key_value_table(scope, name)}))
-        elif args.action == "put":
-            print(json.dumps({"version": mgr.open(scope, name).put(args.key, args.value)}))
-        else:
-            got = mgr.open(scope, name).get(args.key)
-            print(json.dumps({"value": got[0], "version": got[1]} if got else None))
-        return 0
-    t = KeyValueTableManager(_store(args).spark, args.root).open(scope, name)
-    for row in t.iterate_all().collect():
-        print(json.dumps({"pk": row["pk"], "sk": row["sk"], "value": row["value"],
-                          "version": row["version"]}))
+    # no JVM: metadata docs, driver-side parquet writes, Arrow key
+    # lookups and, for a bounded table, the Arrow scan of kvt list
+    mgr = KeyValueTableManager(None, args.root)
+    if args.action == "create":
+        # whether the table was NEWLY created (scripts probe it for an
+        # existing table), with its qualified name
+        t = mgr.create_key_value_table(scope, name)
+        print(json.dumps({"created": t.was_created, "table": f"{scope}/{name}"}))
+    elif args.action == "delete":
+        print(json.dumps({"deleted": mgr.delete_key_value_table(scope, name)}))
+    elif args.action == "put":
+        print(json.dumps({"version": mgr.open(scope, name).put(args.key, args.value)}))
+    elif args.action == "get":
+        got = mgr.open(scope, name).get(args.key)
+        print(json.dumps({"value": got[0], "version": got[1]} if got else None))
+    else:
+        try:
+            rows = mgr.open(scope, name).iterate_all_arrow().to_pylist()
+        except SparkRequiredException:  # above the bound: the Spark scan
+            t = KeyValueTableManager(_store(args).spark, args.root).open(scope, name)
+            rows = [row.asDict() for row in t.iterate_all().collect()]
+        for row in rows:
+            print(json.dumps({k: row[k] for k in ("pk", "sk", "value", "version")}))
     return 0
 
 

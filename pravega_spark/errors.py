@@ -87,3 +87,12 @@ class ConcurrentModificationException(PravegaSparkError):
     mid-commit. The commit is abandoned (its staged files stay invisible
     and are fsck-reapable); the caller may retry from a fresh read.
     """
+
+
+class SparkRequiredException(PravegaSparkError):
+    """A KVT operation needs the SparkSession its table was opened
+    without (``spark=None``): a DataFrame result, a scan or compaction
+    whose log is above the driver-side bound, or an update batch above
+    ``KVT_HOT_MAX_ROWS``. Below those bounds the table's Arrow twins
+    (``snapshot_arrow`` and the like) and ``compact`` serve it without
+    one."""

@@ -32,26 +32,44 @@ max-version row per key wins — no Spark job, so a table opened with
 Like the reference's in-memory key cache in front of the table segment
 (ContainerKeyIndex.java), a process-wide LRU (``row_cache``, bounded at
 ``ROW_CACHE_BYTES`` of Arrow data) keeps each row group already read, as
-the Arrow table it was read into, and each file's per-row-group pk
-ranges, keyed by the file's full path; a hot update also caches the
-table it has just written. A warm lookup therefore opens no file it has
-seen before, and its cost no longer grows with the files written since
-the last ``compact()``. The cache pays off when lookups come back to
-the row groups they read before (the same keys, or keys written in the
-same batches) while those still fit the budget; a lookup that misses
-reads and filters its row groups as an uncached one would, so traffic
-without that locality pays only the bookkeeping and the evictions on
-top. Nothing is
-ever invalidated, because nothing cached can go stale: log files are
+the Arrow table it was read into, and each file's footer summary (per
+row group, the pk range and the uncompressed size), keyed by the file's
+full path; a hot update also caches the table it has just written. A
+warm lookup therefore opens no file it has seen before, and its cost no
+longer grows with the files written since the last ``compact()``. The
+cache pays off when lookups come back to the row groups they read
+before (the same keys, or keys written in the same batches) while those
+still fit the budget; a lookup that misses reads and filters its row
+groups as an uncached one would, so traffic without that locality pays
+only the bookkeeping and the evictions on top. Nothing is ever
+invalidated, because nothing cached can go stale: log files are
 immutable and uuid-tagged, and the manifest reloaded from the meta doc
 stays the only source of visibility, so a file that compaction or
 ``fsck`` removed is never asked for again and ages out of the LRU.
-``snapshot()``, the iterators, the delta iterator and ``compact()``
-resolve the latest version per key with a Spark window (max-version
-row) over the whole log; ``compact()`` rewrites the log keeping only
-live heads — the lakehouse MERGE/OPTIMIZE pattern replacing the
-reference's hash-table segment + compactor. The version log doubles
-as the change feed (delta iterator) for free.
+
+Scans (``snapshot()``, the four iterators, the delta iterator) and
+``compact()`` run in Arrow on the driver too, as the reference serves
+its iterators and compaction inside the segment store
+(TableStore.java:268,286, TableCompactor.java:71), as long as the log
+they read is bounded: the files' uncompressed row-group sizes, summed
+from the footer summaries, at most ``ROW_CACHE_BYTES``. A scan holds
+its log rows in memory at once, so the bound caps its driver memory at
+about the cache's own budget, and the rows it reads go through
+``row_cache`` like a lookup's (a warm scan opens no file it has read).
+It keeps the max-version row per ``(pk, sk)``, drops tombstones and
+applies its predicate in Arrow; ``iterate_primary_key`` reads only the
+pk's bucket. DataFrame results are ``createDataFrame`` over the sorted
+Arrow table, a local relation that runs no Spark job, and the
+``*_arrow`` twins return the table itself, so a table opened with
+``spark=None`` (the CLI's) serves every op while it stays bounded.
+Compaction writes one file per bucket, the bucket's live heads, under
+the same lock → write → meta flip → remove-originals order as the
+distributed writer. Above the bound, both run as Spark jobs: the latest
+version per key is a window (max-version row) over the whole log, and
+``compact()`` rewrites it through the distributed writer — the
+lakehouse MERGE/OPTIMIZE pattern in place of the reference's hash-table
+segment and compactor. The version log doubles as the change feed
+(delta iterator) for free.
 """
 
 from __future__ import annotations
@@ -63,6 +81,7 @@ import threading
 import time
 import uuid
 from collections import OrderedDict
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -74,6 +93,7 @@ from pravega_spark.errors import (
     BadKeyVersionException,
     ConcurrentModificationException,
     NoSuchKeyException,
+    SparkRequiredException,
 )
 
 # Version sentinels mirroring tables.Version.NO_VERSION / NOT_EXISTS
@@ -87,11 +107,16 @@ MUST_NOT_EXIST = -2
 KVT_HOT_MAX_ROWS = int(os.environ.get("PRAVEGA_SPARK_KVT_HOT_MAX_ROWS", "100000"))
 
 _LOG_COLUMNS = ["pk", "sk", "value", "version", "deleted"]
+_ENTRY_DDL = "pk string, sk string, value string, version long"
+_DELTA_DDL = _ENTRY_DDL + ", deleted boolean"
 
 # Byte budget of the process-wide row-group cache of the point path,
 # counted as the Arrow buffer bytes of the row groups it holds: about
 # four of the largest hot batches (KVT_HOT_MAX_ROWS rows of short keys
-# and values take some 7 MiB), and the most the cache adds to a process
+# and values take some 7 MiB), and the most the cache adds to a process.
+# It is also the driver-side bound of scans and compaction: a log whose
+# row groups take at most this many uncompressed bytes is resolved in
+# Arrow, a larger one by Spark.
 ROW_CACHE_BYTES = 32 << 20
 
 
@@ -155,20 +180,43 @@ def _log_schema():
     ])
 
 
-def _summary_bytes(ranges: list) -> int:
+def _summary_bytes(footer: list) -> int:
     size = sys.getsizeof
-    return size(ranges) + sum(size(r) + size(r[0]) + size(r[1]) for r in ranges)
+    return size(footer) + sum(size(r) + size(r[0]) + size(r[1]) + size(r[2]) for r in footer)
 
 
-def _file_tables(path: str, pks: set[str], value_set):
-    """Yield Arrow tables holding every row of one log file whose pk is
-    in ``pks``: the whole file when its writer cached it, else each row
-    group whose pk range may hold one of ``pks``. Cached ones come from
+def _cache_summary(path: str, footer: list) -> list:
+    row_cache.put(path, footer, _summary_bytes(footer))
+    return footer
+
+
+def _write_log_file(table, path: str) -> None:
+    """Write one log file driver-side and cache its footer summary, which
+    the next scan's bound check reads."""
+    footer = fsio.parquet_write_table(table, path)
+    _cache_summary(path, fsio.parquet_row_group_stats(footer, "pk"))
+
+
+def _file_bytes(path: str) -> int:
+    """Uncompressed size of one log file's row groups, from its cached
+    footer summary, or from its footer, whose summary is then cached."""
+    footer = row_cache.get(path)
+    if footer is None:
+        footer = _cache_summary(path, fsio.parquet_footer(path, "pk"))
+    return sum(n for _, _, n in footer)
+
+
+def _file_tables(path: str, wanted, value_set=None):
+    """Yield Arrow tables holding every row of one log file in a row
+    group whose pk range ``wanted(lo, hi)`` accepts (a row group without
+    pk statistics is always wanted): the whole file when its writer
+    cached it, else each wanted row group. Cached ones come from
     ``row_cache`` whole. The others are read one at a time, cached as
-    read, and cut to ``value_set`` (the wanted pks) before they are
-    yielded, as an uncached lookup cut them, so a lookup holds at most
-    one uncached row group beyond its matches. A file whose summary is
-    cached is opened only when one of its wanted row groups is not."""
+    read, and, given a ``value_set`` of pks, cut to those pks before
+    they are yielded, as an uncached lookup cut them, so a lookup holds
+    at most one uncached row group beyond its matches. A file whose
+    summary is cached is opened only when one of its wanted row groups
+    is not."""
     import pyarrow.compute as pc
 
     whole = row_cache.get((path,))  # the rows its writer cached
@@ -177,22 +225,20 @@ def _file_tables(path: str, pks: set[str], value_set):
         yield whole
         return
 
-    def wanted(lo, hi) -> bool:
-        return lo is None or any(lo <= pk <= hi for pk in pks)
+    def keep(lo, hi) -> bool:
+        return lo is None or wanted(lo, hi)
 
-    ranges = row_cache.get(path)
-    if ranges is not None:
-        hits = [row_cache.get((path, i)) for i, (lo, hi) in enumerate(ranges) if wanted(lo, hi)]
+    footer = row_cache.get(path)
+    if footer is not None:
+        hits = [row_cache.get((path, i)) for i, (lo, hi, _) in enumerate(footer) if keep(lo, hi)]
         if all(t is not None for t in hits):
             row_cache.tally(len(hits), 0)
             yield from hits
             return
-    footer: list[tuple] = []
-    hits = []
+    footer, hits = [], []
 
-    def keep(i, lo, hi) -> bool:
-        footer.append((lo, hi))
-        if not wanted(lo, hi):
+    def read(i, lo, hi) -> bool:
+        if not keep(lo, hi):
             return False
         t = row_cache.get((path, i))
         if t is not None:
@@ -200,15 +246,105 @@ def _file_tables(path: str, pks: set[str], value_set):
         return t is None
 
     misses = 0
-    for i, _lo, _hi, t in fsio.parquet_row_groups(path, "pk", keep, _LOG_COLUMNS):
+    for i, _lo, _hi, t in fsio.parquet_row_groups(path, "pk", read, _LOG_COLUMNS, footer):
         misses += 1
-        if not t.schema.equals(_log_schema()):  # one schema for the lookup's concat
+        if not t.schema.equals(_log_schema()):  # one schema for the caller's concat
             t = t.select(_LOG_COLUMNS).cast(_log_schema())
         row_cache.put((path, i), t, t.get_total_buffer_size())
-        yield t.filter(pc.is_in(t["pk"], value_set=value_set))
+        yield t if value_set is None else t.filter(pc.is_in(t["pk"], value_set=value_set))
     yield from hits
     row_cache.tally(len(hits), misses)
-    row_cache.put(path, footer, _summary_bytes(footer))
+    _cache_summary(path, footer)
+
+
+def _live_heads(t):
+    """The max-version row of each ``(pk, sk)`` among log rows ``t``,
+    tombstones dropped, sorted by ``(pk, sk)``: the Spark window's
+    ``row_number() == 1`` over ``desc(version)`` (a key's versions are
+    distinct), as an Arrow sort and a neighbour compare."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = t.sort_by([("pk", "ascending"), ("sk", "ascending"), ("version", "descending")])
+    if t.num_rows > 1:
+        pk, sk = t["pk"].combine_chunks(), t["sk"].combine_chunks()
+        first = pc.or_(pc.not_equal(pk[1:], pk[:-1]), pc.not_equal(sk[1:], sk[:-1]))
+        t = t.filter(pa.concat_arrays([pa.array([True]), first]))
+    return t.filter(pc.invert(t["deleted"]))
+
+
+def _any_pk(lo, hi) -> bool:
+    return True
+
+
+class _Scan(NamedTuple):
+    """One latest-entries scan, in both engines. ``keep(lo, hi)``: may a
+    row group of that pk range hold a match; ``arrow(t)``: the matching
+    rows of an Arrow table as a mask, ``spark()``: the same match as a
+    Spark column (``None``: every row); ``order``: the Spark path's sort
+    (the Arrow path always returns ``(pk, sk)`` order, which every
+    ``order`` agrees with); ``bucket``: the one ``bucket=N`` directory
+    that holds every match, when there is one."""
+    keep: Callable = _any_pk
+    arrow: Callable | None = None
+    spark: Callable | None = None
+    order: tuple = ("pk", "sk")
+    bucket: str | None = None
+
+
+def _prefix_scan(prefix: str) -> _Scan:
+    import pyarrow.compute as pc
+
+    return _Scan(
+        # a pk starting with prefix lies in [prefix, the next string
+        # without it); it meets [lo, hi] unless hi is below prefix or lo
+        # is past every such pk
+        keep=lambda lo, hi: hi >= prefix and (lo < prefix or lo.startswith(prefix)),
+        arrow=lambda t: pc.starts_with(t["pk"], prefix),
+        spark=lambda: F.col("pk").startswith(prefix),
+    )
+
+
+def _range_scan(from_pk: str, to_pk: str) -> _Scan:
+    import pyarrow.compute as pc
+
+    return _Scan(
+        keep=lambda lo, hi: hi >= from_pk and lo < to_pk,
+        arrow=lambda t: pc.and_(pc.greater_equal(t["pk"], from_pk), pc.less(t["pk"], to_pk)),
+        spark=lambda: (F.col("pk") >= from_pk) & (F.col("pk") < to_pk),
+    )
+
+
+def _primary_key_scan(pk: str, sk_from: str | None, sk_to: str | None, bucket: str) -> _Scan:
+    import pyarrow.compute as pc
+
+    def arrow(t):
+        mask = pc.equal(t["pk"], pk)
+        if sk_from is not None:
+            mask = pc.and_(mask, pc.greater_equal(t["sk"], sk_from))
+        if sk_to is not None:
+            mask = pc.and_(mask, pc.less(t["sk"], sk_to))
+        return mask
+
+    def spark():
+        col = F.col("pk") == pk
+        if sk_from is not None:
+            col = col & (F.col("sk") >= sk_from)
+        if sk_to is not None:
+            col = col & (F.col("sk") < sk_to)
+        return col
+
+    return _Scan(keep=lambda lo, hi: lo <= pk <= hi, arrow=arrow, spark=spark,
+                 order=("sk",), bucket=bucket)
+
+
+def _parquet_files(path: str) -> list[str]:
+    """The data files under ``path``, relative to it, sorted: parquet
+    files that are not writer side files (``_SUCCESS``, ``.crc``)."""
+    return sorted(
+        f for f in fsio.list_files_recursive(path)
+        if f.endswith(".parquet") and not os.path.basename(f).startswith(("_", "."))
+    )
 
 
 def _key(pk: str, sk: str | None) -> tuple[str, str]:
@@ -218,9 +354,15 @@ def _key(pk: str, sk: str | None) -> tuple[str, str]:
 
 
 class KeyValueTable:
-    """One KVT instance rooted at ``<root>/kvt/<scope>/<name>``."""
+    """One KVT instance rooted at ``<root>/kvt/<scope>/<name>``.
 
-    def __init__(self, spark: SparkSession, root: str, scope: str, name: str,
+    ``spark`` may be ``None``: point ops, hot updates, ``compact()`` and
+    the ``*_arrow`` scan twins then run driver-side while the table stays
+    within the bounds the module docstring names; past them, and for the
+    DataFrame-returning scans, the table raises
+    ``SparkRequiredException``."""
+
+    def __init__(self, spark: SparkSession | None, root: str, scope: str, name: str,
                  config: KeyValueTableConfiguration | None = None):
         self.spark = spark
         self.scope, self.name = scope, name
@@ -228,8 +370,8 @@ class KeyValueTable:
         self.meta_path = fsio.join(self.path, "_kvt_meta.json")
         self.data_path = fsio.join(self.path, "log")
         doc = fsio.read_json(self.meta_path, None)
-        # True when THIS open created the table (CLI reports it so
-        # scripts can detect already-exists — r7 ADVICE fix)
+        # True when THIS open created the table (the CLI reports it, so
+        # scripts can tell a new table from an existing one)
         self.was_created = doc is None
         if doc is not None:
             self.config = KeyValueTableConfiguration(**doc["config"])
@@ -244,11 +386,7 @@ class KeyValueTable:
             self._save_meta()
 
     def _list_data_files(self) -> set[str]:
-        return {
-            f
-            for f in fsio.list_files_recursive(self.data_path)
-            if f.endswith(".parquet") and not os.path.basename(f).startswith(("_", "."))
-        }
+        return set(_parquet_files(self.data_path))
 
     def _reload_meta(self) -> None:
         """Adopt the latest committed state (files + version counter) —
@@ -290,6 +428,14 @@ class KeyValueTable:
             },
         )
 
+    def _spark_for(self, what: str) -> SparkSession:
+        if self.spark is None:
+            raise SparkRequiredException(
+                f"kvt {self.scope}/{self.name}: {what} needs a SparkSession; "
+                "this table was opened with spark=None"
+            )
+        return self.spark
+
     # ---------------- write path (K1) ----------------
     def _log(self) -> DataFrame | None:
         # always adopt the latest committed manifest: reads must see
@@ -298,16 +444,32 @@ class KeyValueTable:
         self._reload_meta()
         if not self._files:
             return None
+        return self._log_frame(self._files)
+
+    def _log_frame(self, rels: list[str]) -> DataFrame:
         return self.spark.read.option("basePath", self.data_path).parquet(
-            *[fsio.join(self.data_path, f) for f in self._files]
+            *[fsio.join(self.data_path, f) for f in rels]
         )
 
-    def _latest(self) -> DataFrame | None:
-        log = self._log()
-        if log is None:
-            return None
-        w = Window.partitionBy("pk", "sk").orderBy(F.desc("version"))
-        return log.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") == 1).drop("_rk")
+    def _bounded(self, rels: list[str]) -> bool:
+        """Do the row groups of ``rels`` (paths relative to the log) take
+        at most ``ROW_CACHE_BYTES`` uncompressed, so Arrow on the driver
+        may read them all at once?"""
+        total = 0
+        for rel in rels:
+            total += _file_bytes(fsio.join(self.data_path, rel))
+            if total > ROW_CACHE_BYTES:
+                return False
+        return True
+
+    def _read_log(self, rels: list[str], keep=_any_pk):
+        """The log rows of ``rels`` as one Arrow table, read through
+        ``row_cache``, leaving out row groups whose pk range ``keep``
+        rejects."""
+        import pyarrow as pa
+
+        parts = [t for rel in rels for t in _file_tables(fsio.join(self.data_path, rel), keep)]
+        return pa.concat_tables(parts) if parts else _log_schema().empty_table()
 
     def update(self, entries: list[tuple], kinds: list[str], expected_versions: list[int] | None = None) -> int:
         """Atomic batch of Insert/Put/Remove modifications (one commit).
@@ -370,45 +532,28 @@ class KeyValueTable:
             # a batch of pure no-ops mutates nothing: no version burned,
             # no file committed
             return self._next_version - 1
-        n_buckets = self.config.partition_count
         tag = uuid.uuid4().hex[:8]
         if len(rows) <= KVT_HOT_MAX_ROWS:
             # hot path: per-bucket pyarrow writes, zero Spark jobs —
             # file schema identical to the distributed writer's
-            new_files = self._write_rows_hot(rows, version, tag, n_buckets)
+            new_files = self._write_rows_hot(rows, version, tag)
         else:
-            df = self.spark.createDataFrame(
-                rows, "pk string, sk string, value string, version long, deleted boolean"
-            ).withColumn("bucket", hash_to_bucket("pk", n_buckets))
-            # stage → move under unique names → manifest flip (atomic commit)
-            tmp = f"{self.data_path}.commit.{tag}"
-            df.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-            new_files = []
-            for rel in sorted(
-                f for f in fsio.list_files_recursive(tmp)
-                if f.endswith(".parquet") and not os.path.basename(f).startswith(("_", "."))
-            ):
-                part = rel.split(os.sep, 1)[0]
-                if not part.startswith("bucket="):
-                    continue
-                dst_rel = os.path.join(part, f"v{version}-{tag}-{os.path.basename(rel)}")
-                fsio.move(fsio.join(tmp, rel), fsio.join(self.data_path, dst_rel))
-                new_files.append(dst_rel)
-            fsio.rmtree(tmp)
+            df = self._spark_for(f"an update of more than {KVT_HOT_MAX_ROWS} rows") \
+                .createDataFrame(rows, _DELTA_DDL)
+            new_files = self._write_spark(df, f"v{version}-{tag}")
         self._files = sorted(self._files + new_files)
         self._next_version = version + 1
         self._save_meta()  # data + version become visible together
         return version
 
-    def _write_rows_hot(self, rows: list[dict], version: int, tag: str,
-                        n_buckets: int) -> list[str]:
+    def _write_rows_hot(self, rows: list[dict], version: int, tag: str) -> list[str]:
         """Driver-side commit of a small update batch: bucket routing
         via the scalar twin of the JVM hash, one parquet file per
         touched bucket, exactly the columns/types the Spark writer
         produces (bucket rides in the partition dir, not the file)."""
         import pyarrow as pa
 
-        schema = _log_schema()
+        n_buckets = self.config.partition_count
         by_bucket: dict[int, list[dict]] = {}
         for r in rows:
             by_bucket.setdefault(bucket_for_key_py(r["pk"], n_buckets), []).append(r)
@@ -416,13 +561,35 @@ class KeyValueTable:
         for b, rs in sorted(by_bucket.items()):
             rel = os.path.join(f"bucket={b}", f"v{version}-{tag}-hot.parquet")
             path = fsio.join(self.data_path, rel)
-            t = pa.Table.from_pylist(rs, schema=schema)
-            fsio.parquet_write_table(t, path)
+            t = pa.Table.from_pylist(rs, schema=_log_schema())
+            _write_log_file(t, path)
             # the next CAS read would read these rows straight back: cache
             # them whole-file, which holds whatever row groups the writer made
             row_cache.put((path,), t, t.get_total_buffer_size())
             out.append(rel)
         return out
+
+    def _write_spark(self, df: DataFrame, prefix: str) -> list[str]:
+        """The distributed writer: stage ``df`` partitioned by bucket in
+        a directory beside the log, move each ``bucket=N`` file into the
+        log as ``bucket=N/<prefix>-<file name>`` and return those paths,
+        relative to the log, for the caller's manifest flip."""
+        tmp = f"{self.data_path}.stage.{prefix}"
+        (
+            df.withColumn("bucket", hash_to_bucket("pk", self.config.partition_count))
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(tmp)
+        )
+        new_files: list[str] = []
+        for rel in _parquet_files(tmp):
+            part = rel.split(os.sep, 1)[0]
+            if part.startswith("bucket="):
+                dst_rel = os.path.join(part, f"{prefix}-{os.path.basename(rel)}")
+                fsio.move(fsio.join(tmp, rel), fsio.join(self.data_path, dst_rel))
+                new_files.append(dst_rel)
+        fsio.rmtree(tmp)
+        return new_files
 
     def insert(self, pk: str, value: str, sk: str = "") -> int:
         return self.update([(pk, sk, value)], ["insert"])
@@ -434,20 +601,13 @@ class KeyValueTable:
         return self.update([(pk, sk, None)], ["remove"], [expected_version])
 
     # ---------------- read path (K2/K3/K4) ----------------
-    def snapshot(self) -> DataFrame:
-        """Latest live entries as a DataFrame (the MERGE result)."""
-        latest = self._latest()
-        if latest is None:
-            return self.spark.createDataFrame([], "pk string, sk string, value string, version long")
-        return latest.filter(~F.col("deleted")).select("pk", "sk", "value", "version")
-
     def _point_lookup(self, keys) -> dict[tuple[str, str], tuple[str, int]]:
         """Latest live ``(value, version)`` of each stored-form key in
         ``keys``, read driver-side from the manifest as last loaded (the
         table-segment key-index lookup, ContainerKeyIndex.java). Consults
         only the keys' ``bucket=N/`` files — the bucket is the writers'
         own hash — and skips row groups whose pk statistics exclude every
-        wanted key. Row groups and per-file pk ranges already read or
+        wanted key. Row groups and per-file summaries already read or
         written come from ``row_cache`` (the module docstring says why it
         needs no invalidation); the others are read one at a time, as
         before the cache, and cached. All of them are then cut to the
@@ -466,7 +626,9 @@ class KeyValueTable:
         for rel in self._files:
             pks = pks_by_bucket.get(rel.split(os.sep, 1)[0])
             if pks:
-                parts.extend(_file_tables(fsio.join(self.data_path, rel), pks, value_set))
+                parts.extend(_file_tables(
+                    fsio.join(self.data_path, rel),
+                    lambda lo, hi, pks=pks: any(lo <= pk <= hi for pk in pks), value_set))
         if not parts:
             return {}
         t = pa.concat_tables(parts)
@@ -491,40 +653,111 @@ class KeyValueTable:
     def exists(self, pk: str, sk: str = "") -> bool:
         return self.get(pk, sk) is not None
 
+    def _result(self, t, ddl: str, spark_frame, as_arrow: bool, what: str):
+        """A scan's result as asked: the Arrow table ``t`` or a local
+        relation over it, or, when ``t`` is ``None`` (the log is above
+        the bound), ``spark_frame()`` or its Arrow collect."""
+        if t is None:
+            self._spark_for(f"{what} over a log above {ROW_CACHE_BYTES} bytes")
+            df = spark_frame()
+            return df.toArrow() if as_arrow else df
+        if as_arrow:
+            return t
+        spark = self._spark_for(f"{what} returns a DataFrame ({what}_arrow does not) and")
+        return spark.createDataFrame(t, ddl)
+
+    def _entries(self, scan: _Scan, as_arrow: bool, what: str):
+        """The latest live entries ``scan`` matches: resolved in Arrow from
+        the files that can hold them while those are bounded, else by the
+        Spark window over the whole log."""
+        self._reload_meta()  # scans see other processes' commits
+        rels = self._files
+        if scan.bucket is not None:
+            rels = [rel for rel in rels if rel.split(os.sep, 1)[0] == scan.bucket]
+        t = None
+        if self._bounded(rels):
+            t = self._read_log(rels, scan.keep)
+            if scan.arrow is not None:
+                t = t.filter(scan.arrow(t))
+            t = _live_heads(t).select(_LOG_COLUMNS[:4])
+
+        def spark_frame():
+            df = self._latest(self._files)
+            df = df.filter(~F.col("deleted")).select(*_LOG_COLUMNS[:4])
+            if scan.spark is not None:
+                df = df.filter(scan.spark())
+            return df.orderBy(*scan.order) if scan.order else df
+
+        return self._result(t, _ENTRY_DDL, spark_frame, as_arrow, what)
+
+    def _latest(self, rels: list[str]) -> DataFrame:
+        w = Window.partitionBy("pk", "sk").orderBy(F.desc("version"))
+        return (self._log_frame(rels).withColumn("_rk", F.row_number().over(w))
+                .filter(F.col("_rk") == 1).drop("_rk"))
+
+    def snapshot(self) -> DataFrame:
+        """Latest live entries as a DataFrame (the MERGE result)."""
+        return self._entries(_Scan(order=()), False, "snapshot")
+
+    def snapshot_arrow(self):
+        """:meth:`snapshot` as an Arrow table, sorted by ``(pk, sk)``."""
+        return self._entries(_Scan(), True, "snapshot")
+
     def iterate_all(self) -> DataFrame:
-        return self.snapshot().orderBy("pk", "sk")
+        return self._entries(_Scan(), False, "iterate_all")
+
+    def iterate_all_arrow(self):
+        return self._entries(_Scan(), True, "iterate_all")
 
     def iterate_prefix(self, prefix: str) -> DataFrame:
-        return self.snapshot().filter(F.col("pk").startswith(prefix)).orderBy("pk", "sk")
+        return self._entries(_prefix_scan(prefix), False, "iterate_prefix")
+
+    def iterate_prefix_arrow(self, prefix: str):
+        return self._entries(_prefix_scan(prefix), True, "iterate_prefix")
 
     def iterate_range(self, from_pk: str, to_pk: str) -> DataFrame:
-        return (
-            self.snapshot()
-            .filter((F.col("pk") >= from_pk) & (F.col("pk") < to_pk))
-            .orderBy("pk", "sk")
-        )
+        return self._entries(_range_scan(from_pk, to_pk), False, "iterate_range")
+
+    def iterate_range_arrow(self, from_pk: str, to_pk: str):
+        return self._entries(_range_scan(from_pk, to_pk), True, "iterate_range")
+
+    def _pk_scan(self, pk: str, sk_from: str | None, sk_to: str | None) -> _Scan:
+        bucket = f"bucket={bucket_for_key_py(pk, self.config.partition_count)}"
+        return _primary_key_scan(pk, sk_from, sk_to, bucket)
 
     def iterate_primary_key(self, pk: str, sk_from: str | None = None, sk_to: str | None = None) -> DataFrame:
-        df = self.snapshot().filter(F.col("pk") == pk)
-        if sk_from is not None:
-            df = df.filter(F.col("sk") >= sk_from)
-        if sk_to is not None:
-            df = df.filter(F.col("sk") < sk_to)
-        return df.orderBy("sk")
+        return self._entries(self._pk_scan(pk, sk_from, sk_to), False, "iterate_primary_key")
+
+    def iterate_primary_key_arrow(self, pk: str, sk_from: str | None = None, sk_to: str | None = None):
+        return self._entries(self._pk_scan(pk, sk_from, sk_to), True, "iterate_primary_key")
+
+    def _delta(self, from_version: int, as_arrow: bool):
+        import pyarrow.compute as pc
+
+        self._reload_meta()
+        t = None
+        if self._bounded(self._files):
+            t = self._read_log(self._files)
+            t = t.filter(pc.greater(t["version"], from_version)).sort_by(
+                [("version", "ascending"), ("pk", "ascending"), ("sk", "ascending")])
+
+        def spark_frame():
+            return (
+                self._log_frame(self._files)
+                .filter(F.col("version") > from_version)
+                .select(*_LOG_COLUMNS)
+                .orderBy("version", "pk", "sk")
+            )
+
+        return self._result(t, _DELTA_DDL, spark_frame, as_arrow, "entry_delta_iterator")
 
     def entry_delta_iterator(self, from_version: int = 0) -> DataFrame:
         """Change feed: every modification (incl. tombstones) after a
         position (TableStore.entryDeltaIterator:311)."""
-        log = self._log()
-        if log is None:
-            return self.spark.createDataFrame(
-                [], "pk string, sk string, value string, version long, deleted boolean"
-            )
-        return (
-            log.filter(F.col("version") > from_version)
-            .select("pk", "sk", "value", "version", "deleted")
-            .orderBy("version", "pk", "sk")
-        )
+        return self._delta(from_version, False)
+
+    def entry_delta_iterator_arrow(self, from_version: int = 0):
+        return self._delta(from_version, True)
 
     # ---------------- maintenance ----------------
     def compact(self) -> None:
@@ -536,33 +769,35 @@ class KeyValueTable:
             self._compact_locked()
 
     def _compact_locked(self) -> None:
-        snap = self.snapshot()
         tag = uuid.uuid4().hex[:8]
-        tmp = f"{self.data_path}.compact.{tag}"
-        (
-            snap.withColumn("deleted", F.lit(False))
-            .withColumn("bucket", hash_to_bucket("pk", self.config.partition_count))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(tmp)
-        )
-        new_files: list[str] = []
-        for rel in sorted(
-            f for f in fsio.list_files_recursive(tmp)
-            if f.endswith(".parquet") and not os.path.basename(f).startswith(("_", "."))
-        ):
-            part = rel.split(os.sep, 1)[0]
-            if not part.startswith("bucket="):
-                continue
-            dst_rel = os.path.join(part, f"compact-{tag}-{os.path.basename(rel)}")
-            fsio.move(fsio.join(tmp, rel), fsio.join(self.data_path, dst_rel))
-            new_files.append(dst_rel)
-        fsio.rmtree(tmp)
+        if self._bounded(self._files):
+            new_files = self._compact_arrow(tag)
+        else:
+            self._spark_for(f"compact over a log above {ROW_CACHE_BYTES} bytes")
+            snap = self._latest(self._files).filter(~F.col("deleted")).select(*_LOG_COLUMNS[:4])
+            new_files = self._write_spark(snap.withColumn("deleted", F.lit(False)), f"compact-{tag}")
         old_files = self._files
         self._files = sorted(new_files)
         self._save_meta()  # visibility flip
         for rel in old_files:  # now-invisible originals
             fsio.remove(fsio.join(self.data_path, rel))
+
+    def _compact_arrow(self, tag: str) -> list[str]:
+        """One file per bucket of the bounded log, the bucket's live heads
+        (their ``deleted`` is false), through the hot writer's parquet
+        path. A key's versions all sit in its bucket's directory, so each
+        bucket resolves alone."""
+        by_bucket: dict[str, list[str]] = {}
+        for rel in self._files:
+            by_bucket.setdefault(rel.split(os.sep, 1)[0], []).append(rel)
+        new_files: list[str] = []
+        for part, rels in sorted(by_bucket.items()):
+            heads = _live_heads(self._read_log(rels))
+            if heads.num_rows:
+                rel = os.path.join(part, f"compact-{tag}.parquet")
+                _write_log_file(heads, fsio.join(self.data_path, rel))
+                new_files.append(rel)
+        return new_files
 
     def fsck(self) -> list[str]:
         """Reap orphan parquet files from crashed commits/compactions.
@@ -584,7 +819,7 @@ class KeyValueTable:
 class KeyValueTableManager:
     """KVT DDL (reference: KeyValueTableManager.java / D8)."""
 
-    def __init__(self, spark: SparkSession, root: str):
+    def __init__(self, spark: SparkSession | None, root: str):
         self.spark = spark
         self.root = root
 

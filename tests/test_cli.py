@@ -1,9 +1,10 @@
 """User CLI (M3): command groups driven via main(argv).
 
 These tests pin the JVM-free surface (scope and stream metadata, kvt
-create/put/get), which must never start a SparkSession. The JVM-backed
-commands (stream read, kvt list) are covered end-to-end by the module
-docstring's manual drive.
+create/put/get, and kvt list on a table below the driver-side scan
+bound), which must never start a SparkSession, and kvt list's Spark
+fallback above that bound. stream read, which always needs the JVM, is
+covered end-to-end by the module docstring's manual drive.
 """
 
 import json
@@ -67,3 +68,37 @@ def test_kvt_put_get_never_start_spark(tmp_path, capsys, monkeypatch):
     assert json.loads(out) == {"value": "v2", "version": 2}
     rc, out = run(capsys, "--root", root, "kvt", "get", "demo/t1", "absent")
     assert rc == 0 and json.loads(out) is None
+
+
+def _kvt_rows(capsys, root):
+    for args in (("create", "demo/t1"), ("put", "demo/t1", "b", "v1"),
+                 ("put", "demo/t1", "a", "v2"), ("put", "demo/t1", "b", "v3")):
+        assert run(capsys, "--root", root, "kvt", *args)[0] == 0
+    rc, out = run(capsys, "--root", root, "kvt", "list", "demo/t1")
+    assert rc == 0
+    return [json.loads(line) for line in out.splitlines()]
+
+
+WANT_LIST = [{"pk": "a", "sk": "", "value": "v2", "version": 2},
+             {"pk": "b", "sk": "", "value": "v3", "version": 3}]
+
+
+def test_kvt_list_never_starts_spark_below_the_bound(tmp_path, capsys, monkeypatch):
+    def no_spark(*args, **kwargs):
+        raise AssertionError("kvt list on a bounded table must not start a SparkSession")
+
+    monkeypatch.setattr("pravega_spark.cli._store", no_spark)
+    monkeypatch.setattr("pravega_spark.session.get_spark", no_spark)
+    assert _kvt_rows(capsys, str(tmp_path / "store")) == WANT_LIST
+
+
+def test_kvt_list_above_the_bound_runs_the_spark_scan(spark, tmp_path, capsys, monkeypatch):
+    import pravega_spark.cli as cli
+    import pravega_spark.kvt as kvt_mod
+
+    started = []
+    store = cli._store
+    monkeypatch.setattr(cli, "_store", lambda args: started.append(args) or store(args))
+    monkeypatch.setattr(kvt_mod, "ROW_CACHE_BYTES", 0)
+    assert _kvt_rows(capsys, str(tmp_path / "store")) == WANT_LIST
+    assert len(started) == 1  # kvt list, and no other command

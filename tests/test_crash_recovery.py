@@ -6,6 +6,8 @@ retried commit lands the same rows exactly once. Crashes are injected by
 making the metadata write raise mid-commit.
 """
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -276,3 +278,57 @@ def test_streaming_sink_crash_pump_path_replays_exactly_once(store, events, monk
     assert True in pump_calls, "pump never engaged"
     store.fsck_stream("s", "dst")  # reap any crash orphans
     assert _ids(store.read("s", "dst")) == list(range(n))
+
+
+def test_kvt_arrow_compaction_crash_before_the_meta_flip(tmp_path, monkeypatch):
+    """A driver-side compaction writes its bucket files, then flips the
+    meta doc. A crash between the two leaves the new files invisible:
+    readers see the pre-compaction log, fsck reaps exactly those files,
+    and a retried compaction lands."""
+    from pravega_spark import fsio
+    from pravega_spark.config import KeyValueTableConfiguration
+    from pravega_spark.kvt import KeyValueTableManager
+
+    root = str(tmp_path)
+    t = KeyValueTableManager(None, root).create_key_value_table(
+        "s", "t", KeyValueTableConfiguration(partition_count=4))
+    t.update([(f"k{i:02d}", "", "a") for i in range(20)], ["put"] * 20)
+    t.update([(f"k{i:02d}", "", "b") for i in range(0, 20, 2)], ["put"] * 10)
+    t.update([(f"k{i:02d}", "", None) for i in range(0, 20, 5)], ["remove"] * 4)
+    files, snap = list(t._files), t.snapshot_arrow()
+    delta = t.entry_delta_iterator_arrow(0)
+
+    written = []
+    write_table = fsio.parquet_write_table
+    monkeypatch.setattr(fsio, "parquet_write_table",
+                        lambda table, path: written.append(path) or write_table(table, path))
+    write_json = fsio.write_json_atomic
+    state = {"armed": True}
+
+    def crashing(path, doc):
+        if state["armed"] and path == t.meta_path:
+            state["armed"] = False
+            raise _Boom("crash before the compaction's meta flip")
+        return write_json(path, doc)
+
+    monkeypatch.setattr(fsio, "write_json_atomic", crashing)
+    with pytest.raises(_Boom):
+        t.compact()
+    assert written and all("compact-" in p for p in written)
+    assert all(os.path.exists(p) for p in written)
+
+    other = KeyValueTableManager(None, root).open("s", "t")
+    for reader in (t, other):
+        assert reader.snapshot_arrow().equals(snap)
+        assert reader.entry_delta_iterator_arrow(0).equals(delta)
+        assert reader.get("k02") == ("b", 2) and reader.get("k05") is None
+    assert other._files == files
+    assert all(os.path.exists(os.path.join(t.data_path, rel)) for rel in files)
+
+    reaped = t.fsck()
+    assert sorted(os.path.join(t.data_path, rel) for rel in reaped) == sorted(written)
+    assert not any(os.path.exists(p) for p in written)
+    assert t.snapshot_arrow().equals(snap)
+    t.compact()  # the retry lands
+    assert t.snapshot_arrow().equals(snap) and t.fsck() == []
+    assert not set(t._files) & set(files)
