@@ -822,9 +822,8 @@ def read_bytes_range(path: str, start: int, length: int) -> bytes:
         return fh.read(length)
 
 
-def parquet_write_table(table, path: str, use_deprecated_int96: bool = False):
-    """Write an Arrow table as one parquet file (driver-side hot tier)
-    and return the file's footer (``pyarrow.parquet.FileMetaData``).
+def parquet_write_table(table, path: str, use_deprecated_int96: bool = False) -> None:
+    """Write an Arrow table as one parquet file (driver-side hot tier).
 
     Binary columns (opaque event payloads) are written without column
     statistics: nothing filters on them, and statistics would store each
@@ -839,19 +838,17 @@ def parquet_write_table(table, path: str, use_deprecated_int96: bool = False):
              if not (pa.types.is_binary(fld.type) or pa.types.is_large_binary(fld.type))]
     kw = {"compression": "snappy", "use_deprecated_int96_timestamps": use_deprecated_int96,
           "write_statistics": stats if len(stats) < len(table.schema) else True}
-    footer: list = []
     f, p = _split(path)
     if f is None:
         os.makedirs(os.path.dirname(p), exist_ok=True)
-        pq.write_table(table, p, metadata_collector=footer, **kw)
-        return footer[0]
+        pq.write_table(table, p, **kw)
+        return
     parent = p.rsplit("/", 1)[0]
     from pyarrow import fs as pafs
 
     if f.get_file_info(parent).type == pafs.FileType.NotFound:
         f.create_dir(parent, recursive=True)
-    pq.write_table(table, p, filesystem=f, metadata_collector=footer, **kw)
-    return footer[0]
+    pq.write_table(table, p, filesystem=f, **kw)
 
 
 def parquet_read_table(path: str):
@@ -905,42 +902,13 @@ def parquet_rows_and_range(path: str, column: str) -> tuple[int, int | None, int
     return md.num_rows, lo, hi
 
 
-def parquet_row_group_stats(md, column: str) -> list[tuple]:
-    """``(lo, hi, nbytes)`` of each row group in the parquet footer
-    ``md``: the min and max of ``column`` (``None`` when the row group
-    has no statistics for it) and the row group's uncompressed size, the
-    footer's ``total_byte_size``."""
-    idx = next((i for i in range(md.num_columns) if md.schema.column(i).path == column), None)
-    out = []
-    for i in range(md.num_row_groups):
-        rg = md.row_group(i)
-        lo = hi = None
-        if idx is not None:
-            st = rg.column(idx).statistics
-            if st is not None and st.has_min_max:
-                lo, hi = st.min, st.max
-        out.append((lo, hi, rg.total_byte_size))
-    return out
-
-
-def parquet_footer(path: str, column: str) -> list[tuple]:
-    """:func:`parquet_row_group_stats` of one file, reading only its
-    footer."""
-    import pyarrow.parquet as pq
-
-    f, p = _split(path)
-    with pq.ParquetFile(p, filesystem=f) as pf:
-        return parquet_row_group_stats(pf.metadata, column)
-
-
-def parquet_row_groups(path: str, column: str, keep, columns: list[str], footer: list | None = None):
+def parquet_row_groups(path: str, column: str, keep, columns: list[str]):
     """Yield ``(i, lo, hi, table)`` for each row group ``i`` of one
     parquet file that ``keep(i, lo, hi)`` accepts, where ``lo``/``hi``
     are the row group's ``column`` statistics (its min and max), or
     ``None`` when it has none. ``keep`` is asked about every row group,
-    in order. A ``footer`` list receives the file's
-    :func:`parquet_row_group_stats`, so a caller can keep its summary
-    from the same footer read. Only the ``columns`` the file has are
+    in order, so a caller can also note the file's whole pk-range
+    summary from one footer read. Only the ``columns`` the file has are
     read. Each row group is read single-threaded: the callers are
     already parallel units (Spark tasks, the sink pump's thread pool),
     and threads inside one small read only add CPU."""
@@ -948,12 +916,16 @@ def parquet_row_groups(path: str, column: str, keep, columns: list[str], footer:
 
     f, p = _split(path)
     with pq.ParquetFile(p, filesystem=f) as pf:
-        stats = parquet_row_group_stats(pf.metadata, column)
-        if footer is not None:
-            footer.extend(stats)
+        md = pf.metadata
+        idx = next((i for i in range(md.num_columns) if md.schema.column(i).path == column), None)
         have = set(pf.schema_arrow.names)
         cols = [c for c in columns if c in have]
-        for i, (lo, hi, _) in enumerate(stats):
+        for i in range(md.num_row_groups):
+            lo = hi = None
+            if idx is not None:
+                st = md.row_group(i).column(idx).statistics
+                if st is not None and st.has_min_max:
+                    lo, hi = st.min, st.max
             if keep(i, lo, hi):
                 yield i, lo, hi, pf.read_row_group(i, columns=cols, use_threads=False)
 
